@@ -7,10 +7,9 @@ HTML boilerplate stripping, re-architected for a 10^12-document
 Common-Crawl-style corpus on a multi-executor Spark cluster.
 
 Design (see SURVEY.md):
-- All per-page state is document-local → the pipeline is a sequence of
-  Arrow-batched vectorized UDF stages (``mapInPandas`` for embarrassingly
-  parallel kernels, ``applyInPandas(url)`` for page-local grouping) with at
-  most two ``url`` shuffles end-to-end.
+- All per-page state is document-local → extraction is one url-hash
+  spread feeding one Arrow-batched, kind-dispatching ``mapInPandas``
+  kernel: one ``url`` shuffle end-to-end.
 - Every relational shape (filter/agg/window/join/dedup) uses native
   Catalyst operators so the optimizer can push down, prune, and broadcast.
 - No per-row Python anywhere; all numeric kernels are NumPy over Arrow

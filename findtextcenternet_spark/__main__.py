@@ -154,7 +154,7 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.input,
                 out_dir=os.path.join(args.out_dir, "docs"),
                 checkpoint_dir=os.path.join(args.out_dir, "_checkpoint"),
-                include_raster=True, quality_gate=args.quality_gate)
+                quality_gate=args.quality_gate)
         q.awaitTermination()
         print(json.dumps({"mode": "streaming", "out": args.out_dir}))
         if owns_session:

@@ -9,8 +9,9 @@ chain-merge fixpoint, unbound-box directional attach, warichu split,
 space chains, ruby band attach + interleave, next-line edges, block DFS,
 section (multi-column) reading order, warichu reorder, and the
 duplicate/lost space checks. This module is the DataFrame adapter: it runs
-as one ``applyInPandas(url)`` group, so pages never cross executors and
-the stage scales linearly with page count regardless of cluster size.
+on one page at a time inside the extraction kernel, so pages never cross
+executors and the stage scales linearly with page count regardless of
+cluster size.
 """
 
 from __future__ import annotations

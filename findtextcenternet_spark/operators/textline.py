@@ -33,9 +33,9 @@ Documented divergences (each deliberate, none observable on clean pages):
   whose row bands interleave are read row-major like a table instead of
   column-major.
 
-Scale note: this runs inside ``applyInPandas(url)`` — one page per group,
-pages never cross executors, so the stage is embarrassingly parallel and
-its cost is O(page) regardless of corpus size.
+Scale note: this runs per page inside the extraction kernel — pages never
+cross executors, so the stage is embarrassingly parallel and its cost is
+O(page) regardless of corpus size.
 """
 
 from __future__ import annotations

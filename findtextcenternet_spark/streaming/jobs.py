@@ -11,12 +11,12 @@ analogues of its nearest patterns:
                             → checkpoint directory: a restarted query resumes
                               from the last committed micro-batch offset.
 
-Only the HTML extraction leg streams — it is a stateless vectorized
-projection, legal in a streaming plan. The raster leg needs two grouped
-shuffles (group/assemble), which batch handles; at corpus scale the split is
-"stream the cheap 95%, micro-batch the heavy 5% via foreachBatch", and
-``stream_extract_html(..., include_raster=True)`` demonstrates exactly that
-foreachBatch pattern.
+Extraction streams through foreachBatch: each micro-batch runs the batch
+plan (``pipeline.extract_documents``, one url spread + one kind-dispatching
+kernel) and writes its own ``batch_id=<id>`` partition, so html, pdf and
+raster pages all flow through the same code as a batch run. The
+corpus-wide passes (dedup, host caps) stay batch-only; the per-doc quality
+gate is row-local and rides along.
 """
 
 from __future__ import annotations
@@ -80,41 +80,21 @@ def _maybe_quality_gate(docs: DataFrame, quality_gate: bool) -> DataFrame:
 
 def stream_extract_html(spark: SparkSession, input_dir: str,
                         out_dir: str, checkpoint_dir: str,
-                        include_raster: bool = False,
                         quality_gate: bool = False):
-    """Streaming main-content extraction.
-
-    Stateless leg streams natively; with ``include_raster`` every
-    micro-batch runs the FULL batch pipeline via foreachBatch (grouped-map
-    stages are batch-only, so the stream hands each micro-batch to the
-    batch planner — the standard escape hatch for heavy multi-shuffle work
-    inside a stream). Exactly-once: the native file sink uses its commit
-    log; the foreachBatch path writes each micro-batch into its own
-    ``batch_id=<id>`` partition directory with overwrite, so a replayed
-    batch (restart after a mid-batch crash) overwrites its own output
-    instead of duplicating it — idempotent, hence effectively-once.
+    """Streaming main-content extraction over a pages-parquet landing
+    directory: every micro-batch runs the full batch pipeline
+    (``extract_documents``, all page kinds) via foreachBatch. Each batch
+    writes its own ``batch_id=<id>`` partition with overwrite, so a
+    replayed batch (restart after a mid-batch crash) overwrites its own
+    output instead of duplicating it — idempotent, hence effectively-once.
     """
-    from ..pipeline import extract_documents, extract_html_path
+    from ..pipeline import extract_documents
 
     pages = read_pages_stream(spark, input_dir)
-    if include_raster:
-        return _foreach_batch_idempotent(
-            pages, out_dir, checkpoint_dir,
-            transform=lambda b: _maybe_quality_gate(
-                extract_documents(b), quality_gate))
-    if quality_gate:
-        # the gate joins per-doc metadata back onto the batch — a
-        # multi-input plan the native streaming sink can't run without
-        # the foreachBatch escape hatch, so route through it
-        return _foreach_batch_idempotent(
-            pages, out_dir, checkpoint_dir,
-            transform=lambda b: _maybe_quality_gate(
-                extract_html_path(b), True))
-    out = extract_html_path(pages)
-    return (out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _foreach_batch_idempotent(
+        pages, out_dir, checkpoint_dir,
+        transform=lambda b: _maybe_quality_gate(
+            extract_documents(b), quality_gate))
 
 
 def stream_extract_warc(spark: SparkSession, input_dir: str,

@@ -3,10 +3,9 @@
 The layout fuzzer (test_textline_fuzz.py) checks hard invariants on the
 textline kernel in isolation; this renders seeded structured-random
 layouts into full raster PAGES and asserts the distributed pipeline's
-extracted text is byte-identical to the single-process golden — through
-BOTH plans, including the staged variant whose parity is NOT by
-construction (two Arrow exchanges, window re-batching, cross-page decode
-batching sit between detect and assemble).
+extracted text is byte-identical to the single-process golden (a url
+spread and Arrow batching sit between the golden's per-page loop and the
+kernel).
 
 Seeds are disjoint from the corpus fixture ids, so these pages never
 appear in the curated parity tests. Page count defaults to 200
@@ -89,12 +88,11 @@ def fuzz_corpus():
     return pdf, golden
 
 
-@pytest.mark.parametrize("plan", ["unified", "staged"])
+@pytest.mark.parametrize("plan", ["unified"])
 def test_fuzz_page_parity(spark, fuzz_corpus, plan):
     pdf, golden = fuzz_corpus
     pages = pages_from_pandas(spark, pdf)
-    out = extract_documents(pages, num_partitions=8,
-                            staged=(plan == "staged")).toPandas()
+    out = extract_documents(pages, num_partitions=8).toPandas()
     assert len(out) == len(pdf), plan
     assert out["error"].isna().all(), \
         out.loc[out["error"].notna(), ["url", "error"]].head()

@@ -28,7 +28,7 @@ def _run(spark, pdf, n_parts):
 def _norm_nested(cells):
     """Normalize a spans/lines/blocks cell — list of pyspark Rows or
     golden dicts (or None/empty) — to a comparable tuple-of-tuples with
-    keys in sorted order, so golden-vs-spark and plan-vs-plan compares
+    keys in sorted order, so golden-vs-spark and run-vs-run compares
     are exact (floats must be bit-identical: same kernels, same math)."""
     if cells is None or (hasattr(cells, "__len__") and len(cells) == 0):
         return ()
@@ -69,32 +69,11 @@ def test_partitioning_invariance(spark, corpus):
         assert a[col].map(_norm_nested).equals(b[col].map(_norm_nested))
 
 
-def test_unified_matches_legs_matches_staged(spark, corpus):
-    """All three plan shapes — the default one-kernel unified path, the
-    three-leg union, and the staged two-exchange raster variant — must
-    produce byte-identical documents (same per-page kernels), including
-    the nested span/line/block structures."""
-    pages = pages_from_pandas(spark, corpus).repartition(4, "url")
-    cols = ["url", "text", "aozora", "noruby", "path"]
-    unified = (extract_documents(pages).toPandas()
-               .sort_values("url").reset_index(drop=True))
-    legs = (extract_documents(pages, split_legs=True).toPandas()
-            .sort_values("url").reset_index(drop=True))
-    staged = (extract_documents(pages, staged=True).toPandas()
-              .sort_values("url").reset_index(drop=True))
-    for col in NESTED:
-        u = unified[col].map(_norm_nested)
-        assert u.equals(legs[col].map(_norm_nested)), col
-        assert u.equals(staged[col].map(_norm_nested)), col
-    pd.testing.assert_frame_equal(unified[cols], legs[cols])
-    pd.testing.assert_frame_equal(unified[cols], staged[cols])
-
-
 def test_blank_layout_reaches_output_on_both_legs(spark, corpus):
     """A valid raster page with zero glyphs/textlines (and a zero-strength
     separator stroke) must yield an empty-text doc row — not silently
-    vanish — on BOTH the fused and the staged leg (ADVICE r2: the staged
-    leg dropped such urls; detect also raised on v<=0 strokes)."""
+    vanish (ADVICE r2: a url without detections could drop out of the
+    output; detect also raised on v<=0 strokes)."""
     import json
 
     from findtextcenternet_spark.corpus import RASTER_MARKER
@@ -117,20 +96,12 @@ def test_blank_layout_reaches_output_on_both_legs(spark, corpus):
     ])
     pdf = pd.concat([corpus.head(6), extra], ignore_index=True)
     pages = pages_from_pandas(spark, pdf).repartition(4, "url")
-    fused = (extract_documents(pages, staged=False).toPandas()
-             .sort_values("url").reset_index(drop=True))
-    staged = (extract_documents(pages, staged=True).toPandas()
-              .sort_values("url").reset_index(drop=True))
-    assert len(fused) == len(staged) == len(pdf)
-    for out in (fused, staged):
-        rows = out[out.url.str.startswith("https://blank.")]
-        assert len(rows) == 2
-        assert (rows.text == "").all()
-        assert rows.error.isna().all()
-    pd.testing.assert_frame_equal(
-        fused[["url", "text", "aozora", "noruby", "path"]],
-        staged[["url", "text", "aozora", "noruby", "path"]],
-    )
+    out = extract_documents(pages).toPandas()
+    assert len(out) == len(pdf)
+    rows = out[out.url.str.startswith("https://blank.")]
+    assert len(rows) == 2
+    assert (rows.text == "").all()
+    assert rows.error.isna().all()
 
 
 def test_raster_records_nonempty(spark, corpus):
@@ -148,9 +119,8 @@ def test_raster_records_nonempty(spark, corpus):
 
 def test_null_html_quarantined_identically_in_both_plans(spark):
     """ADVICE r4 (medium): a null html cell must become ONE quarantine
-    row — not a task crash (unified kernel did bytes(None)) and not a
-    silently vanished url (the legs' magic-byte filters drop null rows).
-    Both plans emit the byte-identical row."""
+    row — not a task crash (the kernel once did bytes(None)) and not a
+    silently vanished url."""
     from findtextcenternet_spark.pipeline import NULL_PAGE_ERROR
 
     good = generate_pages(10)
@@ -161,17 +131,10 @@ def test_null_html_quarantined_identically_in_both_plans(spark):
     ])
     pages = pages_from_pandas(spark, pd.concat([good, nulls],
                                                ignore_index=True))
-    outs = []
-    for kw in ({}, {"split_legs": True}):
-        out = (extract_documents(pages, num_partitions=4, **kw)
-               .toPandas().sort_values("url").reset_index(drop=True))
-        assert len(out) == 11  # the null url settles, never vanishes
-        row = out[out["url"] == "https://null.example.org/missing-body"]
-        assert len(row) == 1
-        assert row["error"].iloc[0] == NULL_PAGE_ERROR
-        assert row["path"].iloc[0] == "html"
-        assert row["text"].iloc[0] is None
-        outs.append(out)
-    for col in ("url", "text", "path", "error"):
-        assert outs[0][col].fillna("§").tolist() == \
-            outs[1][col].fillna("§").tolist(), col
+    out = extract_documents(pages, num_partitions=4).toPandas()
+    assert len(out) == 11  # the null url settles, never vanishes
+    row = out[out["url"] == "https://null.example.org/missing-body"]
+    assert len(row) == 1
+    assert row["error"].iloc[0] == NULL_PAGE_ERROR
+    assert row["path"].iloc[0] == "html"
+    assert row["text"].iloc[0] is None

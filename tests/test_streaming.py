@@ -32,22 +32,23 @@ def test_stream_extract_html_and_resume(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = stream_extract_html(spark, pages_dir, out, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    n_html = got.count()
-    assert n_html > 0
-    assert set(got.select("path").distinct().toPandas()["path"]) == {"html"}
+    q.awaitTermination(240)
+    got = spark.read.parquet(out).select("url", "path").toPandas()
+    # every input url exactly once, across all three page kinds
+    want = generate_pages(120)["url"]
+    assert sorted(got["url"]) == sorted(want)
+    assert set(got["path"]) == {"html", "pdf", "raster"}
 
     # resume with the same checkpoint: no new input -> no duplicate output
     q2 = stream_extract_html(spark, pages_dir, out, ckpt)
     q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_html
+    assert spark.read.parquet(out).count() == len(got)
 
 
 def test_stream_foreachbatch_full_pipeline(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out_full")
     ckpt = str(tmp_path / "ckpt_full")
-    q = stream_extract_html(spark, pages_dir, out, ckpt, include_raster=True)
+    q = stream_extract_html(spark, pages_dir, out, ckpt)
     q.awaitTermination(240)
     got = spark.read.parquet(out)
     # full pipeline: every input page extracted exactly once
@@ -153,9 +154,8 @@ def test_stream_dedup_exact(spark, tmp_path):
 
 
 def test_stream_stateless_leg_quality_gate(spark, tmp_path):
-    """quality_gate=True on the stateless HTML leg routes through the
-    foreachBatch escape hatch (the gate's metadata join is not a
-    native-streaming-sink plan) and marks rejects without dropping."""
+    """quality_gate=True in the streaming extraction marks rejects as
+    ``quality:<reason>`` error rows without dropping any page."""
     import pandas as pd
 
     pdf = generate_pages(12)
@@ -174,14 +174,8 @@ def test_stream_stateless_leg_quality_gate(spark, tmp_path):
     q = stream_extract_html(spark, d, out, ckpt, quality_gate=True)
     q.awaitTermination(120)
     got = spark.read.parquet(out).toPandas()
-    # none of the leg's pages vanish (raster/pdf pages are the OTHER
-    # legs' by design); the junk page is marked, not dropped
-    from findtextcenternet_spark.pipeline import (
-        extract_html_path,
-        pages_from_pandas,
-    )
-    n_leg = extract_html_path(pages_from_pandas(spark, pdf)).count()
-    assert got["url"].nunique() == n_leg
+    # no page vanishes; the junk page is marked, not dropped
+    assert got["url"].nunique() == len(pdf)
     bad = got[got["error"].notna()].set_index("url")["error"].to_dict()
     assert bad["https://q.example.org/junk"] == "quality:too_repetitive"
 
