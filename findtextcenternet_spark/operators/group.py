@@ -38,14 +38,14 @@ def group_page(boxes: pd.DataFrame, runs: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(columns=OUT_COLS)
     b = boxes.reset_index(drop=True)
 
-    lr = runs[runs["channel"] == "line"]
-    line_runs = (lr[["y", "x1", "x2"]].to_numpy(dtype=np.int64)
-                 if len(lr) else np.zeros((0, 3), dtype=np.int64))
-    sr = runs[runs["channel"] == "sep"]
-    sep_runs = (sr[["y", "x1", "x2"]].to_numpy(dtype=np.int64)
-                if len(sr) else np.zeros((0, 3), dtype=np.int64))
-    if "v" in runs.columns and len(sr):
-        sep_vals = sr["v"].to_numpy(dtype=np.float64)
+    channel = runs["channel"].to_numpy()
+    is_line = channel == "line"
+    is_sep = channel == "sep"
+    yxx = runs[["y", "x1", "x2"]].to_numpy(dtype=np.int64)
+    line_runs = yxx[is_line]
+    sep_runs = yxx[is_sep]
+    if "v" in runs.columns and len(sep_runs):
+        sep_vals = runs["v"].to_numpy()[is_sep].astype(np.float64)
     else:
         sep_vals = np.full(len(sep_runs), 0.982)
 

@@ -69,6 +69,7 @@ M_PI = math.pi
 M_PI_4 = math.pi / 4
 M_PI_2 = math.pi / 2
 RUBY_BITS = SUBTYPE_RUBY  # 2+4; (subtype & 6) == 6 means ruby glyph
+_NO_WRITER = np.iinfo(np.int64).max  # empty cell of a first-writer raster
 
 
 class Page:
@@ -122,6 +123,8 @@ class Page:
         for (y, x1, x2), v in zip(sep_runs, sep_vals):
             self.sepimage[int(y), int(x1):int(x2) + 1] = float(v)
         self.lineblocker = np.zeros((self.H, self.W), dtype=bool)
+        # one-slot memo of the chain-id raster (create_chainid_map)
+        self.cmap_memo: tuple | None = None
 
     def is_ruby(self, i: int) -> bool:
         return (self.subtype[i] & 6) == 6
@@ -132,21 +135,12 @@ class Page:
 
 def _runs_of_mask(mask: np.ndarray) -> list[tuple[int, int, int]]:
     """Row-major RLE of a boolean mask: (y, x1, x2) inclusive."""
-    out = []
-    for y in range(mask.shape[0]):
-        row = mask[y]
-        if not row.any():
-            continue
-        d = np.diff(row.astype(np.int8))
-        starts = np.nonzero(d == 1)[0] + 1
-        ends = np.nonzero(d == -1)[0]
-        if row[0]:
-            starts = np.concatenate([[0], starts])
-        if row[-1]:
-            ends = np.concatenate([ends, [len(row) - 1]])
-        for s, e in zip(starts, ends):
-            out.append((y, int(s), int(e)))
-    return out
+    pad = np.zeros((mask.shape[0], mask.shape[1] + 2), dtype=np.int8)
+    pad[:, 1:-1] = mask
+    d = np.diff(pad, axis=1)
+    ys, x1 = np.nonzero(d == 1)
+    _, x2 = np.nonzero(d == -1)
+    return list(zip(ys.tolist(), x1.tolist(), (x2 - 1).tolist()))
 
 
 class _UnionFind:
@@ -200,26 +194,40 @@ def _label_components_4(mask: np.ndarray) -> tuple[np.ndarray, int]:
     return labels, len(remap)
 
 
+def _dilate(mask: np.ndarray, r: int) -> np.ndarray:
+    """Boolean dilation by the (2r+1) x (2r+1) square (separable)."""
+    H, W = mask.shape
+    pad = np.pad(mask, r)
+    rows = np.zeros((H + 2 * r, W), dtype=bool)
+    for d in range(2 * r + 1):
+        rows |= pad[:, d:d + W]
+    out = np.zeros((H, W), dtype=bool)
+    for d in range(2 * r + 1):
+        out |= rows[d:d + H]
+    return out
+
+
 # ---------------------------------------------------------------- prepare
 
 def prepare_id_image(P: Page) -> tuple[np.ndarray, np.ndarray]:
     """Box-id rasters (prepare.cpp:68-97): idimage stamps every box,
     idimage_main skips ruby glyphs; later box ids overwrite earlier."""
-    idimage = np.full((P.H, P.W), -1, dtype=np.int32)
-    idimage_main = np.full((P.H, P.W), -1, dtype=np.int32)
-    for i in range(P.n):
-        left = int((P.cx[i] - P.w[i] / 2) / SCALE)
-        right = int((P.cx[i] + P.w[i] / 2) / SCALE) + 1
-        top = int((P.cy[i] - P.h[i] / 2) / SCALE)
-        bottom = int((P.cy[i] + P.h[i] / 2) / SCALE) + 1
-        if left < 0 or right >= P.W:
-            continue
-        if top < 0 or bottom >= P.H:
-            continue
-        if not P.is_ruby(i):
-            idimage_main[top:bottom, left:right] = i
-        idimage[top:bottom, left:right] = i
-    return idimage, idimage_main
+    left = ((P.cx - P.w / 2) / SCALE).astype(np.int64)
+    right = ((P.cx + P.w / 2) / SCALE).astype(np.int64) + 1
+    top = ((P.cy - P.h / 2) / SCALE).astype(np.int64)
+    bottom = ((P.cy + P.h / 2) / SCALE).astype(np.int64) + 1
+    inside = (left >= 0) & (right < P.W) & (top >= 0) & (bottom < P.H)
+    main = inside & ((P.subtype & 6) != 6)
+    out = []
+    for keep in (inside, main):
+        image = np.full((P.H, P.W), -1, dtype=np.int32)
+        # later boxes overwrite earlier: a cell keeps its largest box id
+        ids = np.nonzero(keep)[0]
+        flat, rect = _rect_cells(left[ids], right[ids], top[ids],
+                                 bottom[ids], P.W)
+        np.maximum.at(image.ravel(), flat, ids[rect].astype(np.int32))
+        out.append(image)
+    return out[0], out[1]
 
 
 def make_lineblocker(P: Page) -> None:
@@ -237,10 +245,20 @@ def make_lineblocker(P: Page) -> None:
         blocker[on & light[np.clip(labels, 0, None)]] = False
 
     # hysteresis grow (prepare.cpp:135-169): seeds in row-major order,
-    # 8-neighborhood stack walk down to 0.1 * seed value
+    # 8-neighborhood stack walk down to 0.1 * seed value. A walk can only
+    # leave its seed through a non-blocker 8-neighbor at or above the
+    # lowest seed threshold; without one the grow is a no-op.
     seeds = np.nonzero(blocker)
     sep = P.sepimage
     H, W = P.H, P.W
+    if not len(seeds[0]):
+        P.lineblocker = blocker
+        return
+    grow = ~blocker & _dilate(blocker, 1) & (sep.astype(np.float64)
+                              >= float(sep[seeds].min()) * 0.1)
+    if not grow.any():
+        P.lineblocker = blocker
+        return
     for y0, x0 in zip(seeds[0].tolist(), seeds[1].tolist()):
         value_th = sep.item(y0, x0) * 0.1
         stack = [(y0, x0)]
@@ -312,16 +330,7 @@ def detect_line(P: Page) -> tuple[np.ndarray, int]:
     # the blocker-barrier rule can never fire — use run-length union-find
     on_mask = P.lineimage >= LINE_VALUETH
     if P.lineblocker.any():
-        near = np.zeros((H, W), dtype=bool)
-        b = P.lineblocker
-        for dy in (-2, -1, 0, 1, 2):
-            ys_lo, ys_hi = max(0, dy), H + min(0, dy)
-            yd_lo, yd_hi = max(0, -dy), H + min(0, -dy)
-            for dx in (-2, -1, 0, 1, 2):
-                xs_lo, xs_hi = max(0, dx), W + min(0, dx)
-                xd_lo, xd_hi = max(0, -dx), W + min(0, -dx)
-                near[yd_lo:yd_hi, xd_lo:xd_hi] |= b[ys_lo:ys_hi, xs_lo:xs_hi]
-        clear = not (near & on_mask).any()
+        clear = not (_dilate(P.lineblocker, 2) & on_mask).any()
     else:
         clear = True
     if clear:
@@ -383,23 +392,26 @@ def set_angle(P: Page, lineid_map: np.ndarray, lineid_count: int
     the C++ p1/p2 scan)."""
     angle_map = np.full((P.H, P.W), np.nan, dtype=np.float32)
     new_map = np.full((P.H, P.W), -1, dtype=np.int32)
+    ys, xs = np.nonzero(lineid_map >= 0)
+    lid = lineid_map[ys, xs]
+    # cells grouped by component, each group still in row-major order
+    order = np.argsort(lid, kind="stable")
+    ys, xs, lid = ys[order], xs[order], lid[order]
+    bounds = np.searchsorted(lid, np.arange(lineid_count + 1)).tolist()
     new_count = 0
-    for lid in range(lineid_count):
-        ys, xs = np.nonzero(lineid_map == lid)
-        if len(ys) == 0:
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        if lo == hi:
             continue
-        if xs.max() - xs.min() < ys.max() - ys.min():
-            # vertical: topmost -> bottommost
-            k1 = np.lexsort((xs, ys))[0]
-            k2 = np.lexsort((xs, -ys))[0]
-            angle = math.atan2(float(ys[k2] - ys[k1]), float(xs[k2] - xs[k1]))
+        gy, gx = ys[lo:hi], xs[lo:hi]
+        if gx.max() - gx.min() < gy[-1] - gy[0]:
+            # vertical: topmost -> bottommost (leftmost on ties)
+            k1, k2 = 0, int(np.searchsorted(gy, gy[-1]))
         else:
-            # horizontal: leftmost -> rightmost
-            k1 = np.lexsort((ys, xs))[0]
-            k2 = np.lexsort((ys, -xs))[0]
-            angle = math.atan2(float(ys[k2] - ys[k1]), float(xs[k2] - xs[k1]))
-        angle_map[ys, xs] = angle
-        new_map[ys, xs] = new_count
+            # horizontal: leftmost -> rightmost (topmost on ties)
+            k1, k2 = int(gx.argmin()), int(gx.argmax())
+        angle = math.atan2(float(gy[k2] - gy[k1]), float(gx[k2] - gx[k1]))
+        angle_map[gy, gx] = angle
+        new_map[gy, gx] = new_count
         new_count += 1
     return angle_map, new_map, new_count
 
@@ -409,29 +421,35 @@ def chain_boxes(P: Page, lineid_count: int, angle_map: np.ndarray,
     """J1 box<->line spatial join (chain_boxes hough_linefind.cpp:13-121):
     march outward from each non-ruby box center (left, right, up, down at
     each radius, scale-px steps) until a textline cell is hit; attach the
-    box to that line and inherit its direction."""
+    box to that line and inherit its direction. The march is one
+    (box, radius, side) probe grid; each box takes its first hit."""
     chains: list[list[int]] = [[] for _ in range(lineid_count)]
-    H, W = P.H, P.W
-    for boxid in range(P.n):
-        if P.is_ruby(boxid):
-            continue
-        cx, cy = P.cx[boxid], P.cy[boxid]
-        found = False
-        for di in range(0, int(max(P.w[boxid], P.h[boxid]) / 2) + 1, SCALE):
-            for xi, yi in ((cx - di, cy), (cx + di, cy),
-                           (cx, cy - di), (cx, cy + di)):
-                x, y = int(xi / SCALE), int(yi / SCALE)
-                if not (0 <= x < W and 0 <= y < H):
-                    continue
-                lineid = lineid_map.item(y, x)
-                direction = angle_map.item(y, x)
-                if lineid >= 0 and not math.isnan(direction):
-                    chains[lineid].append(boxid)
-                    P.direction[boxid] = direction
-                    found = True
-                    break
-            if found:
-                break
+    boxes = np.nonzero((P.subtype & 6) != 6)[0]
+    if not len(boxes):
+        return chains
+    cx = P.cx[boxes][:, None]
+    cy = P.cy[boxes][:, None]
+    reach = (np.maximum(P.w[boxes], P.h[boxes]) / 2).astype(np.int64)
+    di = np.arange(0, int(reach.max()) + 1, SCALE)
+    # (box, radius, side) with sides in probe order left, right, up, down
+    px = np.stack(np.broadcast_arrays(cx - di, cx + di, cx, cx), axis=2)
+    py = np.stack(np.broadcast_arrays(cy, cy, cy - di, cy + di), axis=2)
+    x = (px / SCALE).astype(np.int64)
+    y = (py / SCALE).astype(np.int64)
+    inb = (x >= 0) & (x < P.W) & (y >= 0) & (y < P.H)
+    x = np.where(inb, x, 0)
+    y = np.where(inb, y, 0)
+    lid = lineid_map[y, x]
+    ang = angle_map[y, x]
+    hit = ((di[None, :] <= reach[:, None])[:, :, None] & inb & (lid >= 0)
+           & ~np.isnan(ang)).reshape(len(boxes), -1)
+    first = hit.argmax(axis=1)
+    found = hit[np.arange(len(boxes)), first]
+    rows = np.nonzero(found)[0]
+    lid = lid.reshape(len(boxes), -1)[rows, first[rows]]
+    P.direction[boxes[rows]] = ang.reshape(len(boxes), -1)[rows, first[rows]]
+    for boxid, lineid in zip(boxes[rows].tolist(), lid.tolist()):
+        chains[lineid].append(boxid)
     return chains
 
 
@@ -440,47 +458,92 @@ def line_grow(P: Page, lineid_count: int, angle_map: np.ndarray,
     """Thicken each line by its chained boxes' max size so a second
     chain_boxes pass catches boxes the thin skeleton missed
     (line_grow hough_linefind.cpp:123-198). Horizontal lines grow upward
-    by max height; vertical grow sideways by max width/2."""
+    by max height; vertical grow sideways by max width/2.
+
+    The reference visits line cells in row-major order; a grow claims
+    only free cells and writes the visiting cell's direction into
+    ``angle_map`` (mutated in place). Upward grows only reach rows
+    already visited, whose line cells are claimed, so they are one
+    first-claimer-wins pass after all rows. A sideways grow can claim a
+    not-yet-visited line cell to its right and so change that cell's
+    direction; only rows holding a vertical-direction cell can do this,
+    and those rows replay the scalar walk."""
     line_width = np.zeros(lineid_count)
-    for lid in range(lineid_count):
-        mw = 0.0
-        for boxid in chains[lid]:
-            if abs(P.direction[boxid]) < M_PI_4:
-                mw = max(mw, P.h[boxid])
-            else:
-                mw = max(mw, P.w[boxid], P.h[boxid])
-        line_width[lid] = mw / SCALE
+    bb = np.fromiter((b for c in chains for b in c), dtype=np.int64)
+    if len(bb):
+        lids = np.repeat(np.arange(lineid_count), [len(c) for c in chains])
+        np.maximum.at(line_width, lids,
+                      np.where(np.abs(P.direction[bb]) < M_PI_4, P.h[bb],
+                               np.maximum(P.w[bb], P.h[bb])))
+    line_width /= SCALE
     H, W = P.H, P.W
+    blocker = P.lineblocker
     map2 = np.full((H, W), -1, dtype=np.int32)
-    ys, xs = np.nonzero(lineid_map >= 0)
-    for y, x in zip(ys.tolist(), xs.tolist()):
-        if P.lineblocker[y, x]:
-            continue
-        lid = lineid_map.item(y, x)
-        map2[y, x] = lid
-        direction = angle_map.item(y, x)
-        mw = int(line_width[lid])
-        if abs(direction) < M_PI_4:
-            for y2 in range(y, max(-1, y - mw - 1), -1):
-                if P.lineblocker[y2, x]:
-                    break
-                if map2.item(y2, x) < 0:
-                    map2[y2, x] = lid
-                    angle_map[y2, x] = direction
-        else:
-            for x2 in range(x, max(-1, x - mw // 2 - 1), -1):
-                if P.lineblocker[y, x2]:
-                    break
-                if map2.item(y, x2) < 0:
-                    map2[y, x2] = lid
-                    angle_map[y, x2] = direction
-            for x2 in range(x, min(W, x + mw // 2 + 1)):
-                if P.lineblocker[y, x2]:
-                    break
-                if map2.item(y, x2) < 0:
-                    map2[y, x2] = lid
-                    angle_map[y, x2] = direction
+    ys, xs = np.nonzero((lineid_map >= 0) & ~blocker)
+    lid = lineid_map[ys, xs]
+    mw = line_width[lid].astype(np.int64)
+
+    sideways = ~(np.abs(angle_map[ys, xs]) < M_PI_4)
+    for y in np.unique(ys[sideways]).tolist():
+        lo, hi = np.searchsorted(ys, [y, y + 1])
+        _grow_row_sideways(map2[y], angle_map[y], blocker[y],
+                           xs[lo:hi], lid[lo:hi], mw[lo:hi])
+    map2[ys, xs] = lid
+
+    d = angle_map[ys, xs]
+    up = np.nonzero(np.abs(d) < M_PI_4)[0]
+    if len(up):
+        sy, sx = ys[up], xs[up]
+        top = np.maximum(sy - mw[up], 0)
+        if blocker.any():
+            # below the nearest blocker row above each cell
+            last_blk = np.maximum.accumulate(
+                np.where(blocker, np.arange(H)[:, None], -1), axis=0)
+            top = np.maximum(top, last_blk[np.maximum(sy - 1, 0), sx] + 1)
+        cnt = np.maximum(sy - top, 0)
+        src = np.repeat(np.arange(len(up)), cnt)
+        k = np.arange(len(src)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        flat = (sy[src] - 1 - k) * W + sx[src]
+        free = map2.ravel()[flat] < 0
+        claim = np.full(H * W, _NO_WRITER, dtype=np.int64)
+        np.minimum.at(claim, flat[free], src[free])
+        cells = np.nonzero(claim < _NO_WRITER)[0]
+        winner = up[claim[cells]]
+        map2.ravel()[cells] = lid[winner]
+        angle_map.ravel()[cells] = d[winner]
     return map2
+
+
+def _grow_row_sideways(map_row: np.ndarray, angle_row: np.ndarray,
+                       blocker_row: np.ndarray, xs: np.ndarray,
+                       lids: np.ndarray, mws: np.ndarray) -> None:
+    """The reference's per-cell walk over one row's line cells (in x
+    order), sideways grows only: a vertical-direction cell claims the
+    free cells up to mw//2 left and right of it, stopping at a blocker.
+    Writes ``map_row`` and ``angle_row`` in place."""
+    W = len(map_row)
+    row_map = [-1] * W
+    row_ang = angle_row.tolist()
+    row_blk = blocker_row.tolist()
+    for x, lid, mw in zip(xs.tolist(), lids.tolist(), mws.tolist()):
+        row_map[x] = lid
+        direction = row_ang[x]
+        if abs(direction) < M_PI_4:
+            continue
+        for x2 in range(x, max(-1, x - mw // 2 - 1), -1):
+            if row_blk[x2]:
+                break
+            if row_map[x2] < 0:
+                row_map[x2] = lid
+                row_ang[x2] = direction
+        for x2 in range(x, min(W, x + mw // 2 + 1)):
+            if row_blk[x2]:
+                break
+            if row_map[x2] < 0:
+                row_map[x2] = lid
+                row_ang[x2] = direction
+    map_row[:] = row_map
+    angle_row[:] = row_ang
 
 
 def linefind(P: Page) -> list[list[int]]:
@@ -504,27 +567,28 @@ def sort_chain(chain: list[int], P: Page) -> None:
     if not chain:
         return
     if abs(P.direction[chain[0]]) < M_PI_4:
-        chain.sort(key=lambda a: (P.cx[a], a))
-        i = 0
-        while i < len(chain):
-            j = i + 1
-            while j < len(chain) and \
-                    P.cx[chain[i]] + P.w[chain[i]] / 2 > P.cx[chain[j]]:
-                j += 1
-            if j - i > 1:
-                chain[i:j] = sorted(chain[i:j], key=lambda a: (P.cy[a], a))
-            i = j
+        axis, cross, size = P.cx, P.cy, P.w
     else:
-        chain.sort(key=lambda a: (P.cy[a], a))
+        axis, cross, size = P.cy, P.cx, P.h
+    idx = np.asarray(chain, dtype=np.int64)
+    a = axis[idx]
+    order = np.lexsort((idx, a))
+    idx, a = idx[order], a[order]
+    # a group runs from its head i up to the first box at or past the
+    # head's half-size reach (a is sorted, so that is a searchsorted)
+    n = len(idx)
+    ends = np.maximum(np.searchsorted(a, a + size[idx] / 2),
+                      np.arange(1, n + 1))
+    out = idx.tolist()
+    if (ends[:-1] > np.arange(1, n)).any():
+        ends = ends.tolist()
         i = 0
-        while i < len(chain):
-            j = i + 1
-            while j < len(chain) and \
-                    P.cy[chain[i]] + P.h[chain[i]] / 2 > P.cy[chain[j]]:
-                j += 1
+        while i < n:
+            j = ends[i]
             if j - i > 1:
-                chain[i:j] = sorted(chain[i:j], key=lambda a: (P.cx[a], a))
+                out[i:j] = sorted(out[i:j], key=lambda b: (cross[b], b))
             i = j
+    chain[:] = out
 
 
 def fix_chain_info(P: Page, chains: list[list[int]]) -> None:
@@ -536,22 +600,29 @@ def fix_chain_info(P: Page, chains: list[list[int]]) -> None:
         sort_chain(chain, P)
 
 
-def search_chain(P: Page, chain: list[int]):
+def _plain_boxes(P: Page, chain: list[int]) -> np.ndarray:
+    """The chain's non-ruby, non-warichu boxes, in chain order."""
+    idx = np.asarray(chain, dtype=np.int64)
+    return idx[((P.subtype[idx] & 6) != 6) & (P.double_line[idx] == 0)]
+
+
+def search_chain(P: Page, nonruby: np.ndarray):
     """A5 weighted endpoint anchors (search_chain search_loop.cpp:87-177):
     start/end transverse anchor = positional-decay weighted mean of the
-    non-ruby, non-warichu boxes; direction re-derived from the anchors."""
-    nonruby = [i for i in chain
-               if not P.is_ruby(i) and P.double_line[i] == 0]
-    if not nonruby:
+    chain's non-ruby, non-warichu boxes (``_plain_boxes``); direction
+    re-derived from the anchors."""
+    if not len(nonruby):
         return 0.0, 0.0, 0.0, -1.0, -1.0, -1.0, -1.0
-    w = max(P.w[i] for i in nonruby)
-    h = max(P.h[i] for i in nonruby)
+    ws, hs = P.w[nonruby], P.h[nonruby]
+    w, h = ws.max(), hs.max()
     direction = P.direction[nonruby[0]]
     n = len(nonruby)
+    k = np.arange(n)
+    area = ws * hs
+    wt1 = area / (k + 1)
+    wt2 = area / (n - k)
     if abs(direction) < M_PI_4:
-        wt1 = np.array([P.w[i] * P.h[i] / (k + 1) for k, i in enumerate(nonruby)])
-        wt2 = np.array([P.w[i] * P.h[i] / (n - k) for k, i in enumerate(nonruby)])
-        cys = np.array([P.cy[i] for i in nonruby])
+        cys = P.cy[nonruby]
         start_cy = float((cys * wt1).sum() / wt1.sum())
         end_cy = float((cys * wt2).sum() / wt2.sum())
         start_cx = float(P.cx[nonruby[0]])
@@ -560,9 +631,7 @@ def search_chain(P: Page, chain: list[int]):
         if direction > M_PI_2:
             direction -= M_PI
     else:
-        wt1 = np.array([P.w[i] * P.h[i] / (k + 1) for k, i in enumerate(nonruby)])
-        wt2 = np.array([P.w[i] * P.h[i] / (n - k) for k, i in enumerate(nonruby)])
-        cxs = np.array([P.cx[i] for i in nonruby])
+        cxs = P.cx[nonruby]
         start_cx = float((cxs * wt1).sum() / wt1.sum())
         end_cx = float((cxs * wt2).sum() / wt2.sum())
         start_cy = float(P.cy[nonruby[0]])
@@ -575,29 +644,29 @@ def find_linecenter_id(P: Page, chains: list[list[int]], chainid: int):
     """Boxes tracking the line center (find_linecenter_id
     search_loop.cpp:180-236): big-enough non-ruby boxes within half a
     line-size of the center fit line."""
-    direction, w, h, s_cx, s_cy, e_cx, e_cy = search_chain(P, chains[chainid])
-    sel: list[int] = []
-    cand = [i for i in chains[chainid]
-            if not P.is_ruby(i) and P.double_line[i] == 0
-            and (max(P.w[i], P.h[i]) / max(w, h) >= 0.4 if max(w, h) > 0 else False)]
-    if not cand:
-        return sel, direction, w, h, s_cx, s_cy, e_cx, e_cy
-    center_x = sum(P.cx[i] for i in cand) / len(cand)
-    center_y = sum(P.cy[i] for i in cand) / len(cand)
+    nonruby = _plain_boxes(P, chains[chainid])
+    direction, w, h, s_cx, s_cy, e_cx, e_cy = search_chain(P, nonruby)
+    s = max(w, h)
+    if not s > 0:
+        return [], direction, w, h, s_cx, s_cy, e_cx, e_cy
+    cand = nonruby[np.maximum(P.w[nonruby], P.h[nonruby]) / s >= 0.4]
+    if not len(cand):
+        return [], direction, w, h, s_cx, s_cy, e_cx, e_cy
+    # builtin sum: the left-to-right float fold of the reference
+    center_x = sum(P.cx[cand].tolist()) / len(cand)
+    center_y = sum(P.cy[cand].tolist()) / len(cand)
     if abs(direction) < M_PI_4:
-        for i in cand:
-            yi = math.tan(direction) * (P.cx[i] - center_x) + center_y
-            if abs(yi - P.cy[i]) < max(w, h) / 2:
-                sel.append(i)
+        fit = math.tan(direction) * (P.cx[cand] - center_x) + center_y
+        near = np.abs(fit - P.cy[cand]) < s / 2
     else:
-        for i in cand:
-            xi = math.tan(M_PI_2 - direction) * (P.cy[i] - center_y) + center_x
-            if abs(xi - P.cx[i]) < max(w, h) / 2:
-                sel.append(i)
-    return sel, direction, w, h, s_cx, s_cy, e_cx, e_cy
+        fit = math.tan(M_PI_2 - direction) * (P.cy[cand] - center_y) \
+            + center_x
+        near = np.abs(fit - P.cx[cand]) < s / 2
+    return (cand[near].tolist(), direction, w, h,
+            s_cx, s_cy, e_cx, e_cy)
 
 
-def _interp_samples(p1, q1, p2, q2):
+def _interp_samples(p1, q1, p2, q2) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized polyline sampling — exact equivalent of the scalar
     per-segment walk ``xp = int(p1); while xp < p2: emit (xp,
     int((xp - p1) * a + q1)); xp += SCALE`` over all segments at once
@@ -612,142 +681,86 @@ def _interp_samples(p1, q1, p2, q2):
     n = np.ceil((p2 - ip1) / SCALE).astype(np.int64)
     n = np.where(valid, np.maximum(n, 0), 0)
     total = int(n.sum())
-    if total == 0:
-        return [], []
     k_idx = np.arange(total) - np.repeat(np.cumsum(n) - n, n)
     p_all = np.repeat(ip1, n) + SCALE * k_idx
     q_all = ((p_all - np.repeat(p1, n)) * np.repeat(a, n)
              + np.repeat(q1, n)).astype(np.int64)
-    return p_all.tolist(), q_all.tolist()
+    return p_all, q_all
+
+
+def _track_extension(P: Page, horizontal: bool, p_start: float,
+                     reach: float, step: int, p_ref: float, q_ref: float,
+                     a: float) -> tuple[np.ndarray, np.ndarray]:
+    """Track-line extension past one end, vectorized: the scalar walk
+    ``p = int(p_start); while p beyond-limit: q = int((p - p_ref) * a +
+    q_ref); stop at a blocker cell, emit in-page points; p += step``
+    (``step`` is +-SCALE; p runs along the line axis). Points come back
+    in walk order."""
+    lim = p_start + reach if step > 0 else p_start - reach
+    p0 = int(p_start)
+    p = p0 + step * np.arange(int(abs(lim - p0) // SCALE) + 2)
+    p = p[p < lim] if step > 0 else p[p > lim]
+    q = ((p - p_ref) * a + q_ref).astype(np.int64)
+    gp, gq = p // SCALE, q // SCALE
+    gx, gy = (gp, gq) if horizontal else (gq, gp)
+    inb = (gx >= 0) & (gx < P.W) & (gy >= 0) & (gy < P.H)
+    hit = np.nonzero(P.lineblocker[gy[inb], gx[inb]])[0]
+    keep = np.nonzero(inb)[0]
+    if len(hit):
+        keep = keep[:hit[0]]
+    return p[keep], q[keep]
 
 
 def make_track_line(P: Page, chains: list[list[int]], chainid: int,
                     extra_len: int = 0):
     """Center track polyline of a chain, sampled every SCALE px
     (make_track_line search_loop.cpp:239-449). Returns (xs, ys, direction,
-    w, h) in pixel coords; extra_len extends past both ends (ruby probe)."""
-    sel, direction, w, h, s_cx, s_cy, e_cx, e_cy = \
+    w, h): int64 arrays in pixel coords plus the chain's search_chain
+    direction and max box size; extra_len extends past both ends (ruby
+    probe). Built in (p, q) = (line axis, cross axis) coordinates."""
+    sel, direction, w, h, _sx, _sy, _ex, _ey = \
         find_linecenter_id(P, chains, chainid)
-    sel_set = set(sel)
-    xs: list[int] = []
-    ys: list[int] = []
-    if abs(direction) < M_PI_4:
-        xi: list[float] = []
-        yi: list[float] = []
-        if sel:
-            j = sel[0]
-            track = P.cy[j]
-            xi.append(P.cx[j] - P.w[j] / 2)
-            yi.append(track)
-        else:
-            return xs, ys, direction, w, h
-        for boxid in chains[chainid]:
-            if P.is_ruby(boxid):
-                continue
-            if boxid in sel_set:
-                track = (track + P.cy[boxid]) / 2
-            xi.append(P.cx[boxid])
-            yi.append(track)
-        j = sel[-1]
-        track = P.cy[j]
-        xi.append(P.cx[j] + P.w[j] / 2)
-        yi.append(track)
-
-        if extra_len > 0 and len(xi) >= 2:
-            x1, y1, x2, y2 = xi[0], yi[0], xi[1], yi[1]
-            a = (y2 - y1) / (x2 - x1) if x2 != x1 else 0.0
-            head_x: list[int] = []
-            head_y: list[int] = []
-            xp = int(x1)
-            while xp > x1 - extra_len * w * 2:
-                yp = int((xp - x1) * a + y1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    head_x.append(xp)
-                    head_y.append(yp)
-                xp -= SCALE
-            xs.extend(reversed(head_x))
-            ys.extend(reversed(head_y))
-
-        px, py = _interp_samples(xi[:-1], yi[:-1], xi[1:], yi[1:])
-        xs.extend(px)
-        ys.extend(py)
-
-        if extra_len > 0 and len(xi) >= 2:
-            x1, y1 = xi[-2], yi[-2]
-            x2, y2 = xi[-1], yi[-1]
-            a = (y2 - y1) / (x2 - x1) if x2 != x1 else 0.0
-            xp = int(x2)
-            while xp < x2 + extra_len * w * 2:
-                yp = int((xp - x1) * a + y1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    xs.append(xp)
-                    ys.append(yp)
-                xp += SCALE
+    if not sel:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, direction, w, h
+    horizontal = abs(direction) < M_PI_4
+    if horizontal:
+        axis, cross, size, span = P.cx, P.cy, P.w, w
     else:
-        xi = []
-        yi = []
-        if sel:
-            j = sel[0]
-            track = P.cx[j]
-            xi.append(track)
-            yi.append(P.cy[j] - P.h[j] / 2)
-        else:
-            return xs, ys, direction, w, h
-        for boxid in chains[chainid]:
-            if P.is_ruby(boxid):
-                continue
-            if boxid in sel_set:
-                track = (track + P.cx[boxid]) / 2
-            xi.append(track)
-            yi.append(P.cy[boxid])
-        j = sel[-1]
-        track = P.cx[j]
-        xi.append(track)
-        yi.append(P.cy[j] + P.h[j] / 2)
-
-        if extra_len > 0 and len(yi) >= 2:
-            x1, y1, x2, y2 = xi[0], yi[0], xi[1], yi[1]
-            a = (x2 - x1) / (y2 - y1) if y2 != y1 else 0.0
-            head_x = []
-            head_y = []
-            yp = int(y1)
-            while yp > y1 - extra_len * h * 2:
-                xp = int((yp - y1) * a + x1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    head_x.append(xp)
-                    head_y.append(yp)
-                yp -= SCALE
-            xs.extend(reversed(head_x))
-            ys.extend(reversed(head_y))
-
-        py, px = _interp_samples(yi[:-1], xi[:-1], yi[1:], xi[1:])
-        xs.extend(px)
-        ys.extend(py)
-
-        if extra_len > 0 and len(yi) >= 2:
-            x1, y1 = xi[-2], yi[-2]
-            x2, y2 = xi[-1], yi[-1]
-            a = (x2 - x1) / (y2 - y1) if y2 != y1 else 0.0
-            yp = int(y2)
-            while yp < y2 + extra_len * h * 2:
-                xp = int((yp - y1) * a + x1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    xs.append(xp)
-                    ys.append(yp)
-                yp += SCALE
-    return xs, ys, direction, w, h
+        axis, cross, size, span = P.cy, P.cx, P.h, h
+    idx = np.asarray(chains[chainid], dtype=np.int64)
+    idx = idx[(P.subtype[idx] & 6) != 6]
+    # the track follows the running midpoint of the selected boxes'
+    # cross positions: fold over the selected boxes (a float recurrence,
+    # kept scalar), then carry each value forward to the next selection
+    track = [float(cross[sel[0]])]
+    for v in cross[sel].tolist():
+        track.append((track[-1] + v) / 2)
+    insel = np.zeros(P.n, dtype=bool)
+    insel[sel] = True
+    insel = insel[idx]
+    first, last = sel[0], sel[-1]
+    pi = np.concatenate(([axis[first] - size[first] / 2], axis[idx],
+                         [axis[last] + size[last] / 2]))
+    qi = np.concatenate(([cross[first]],
+                         np.asarray(track)[np.cumsum(insel)],
+                         [cross[last]]))
+    ps, qs = _interp_samples(pi[:-1], qi[:-1], pi[1:], qi[1:])
+    if extra_len > 0:
+        reach = extra_len * span * 2
+        p1, q1, p2, q2 = pi[0], qi[0], pi[1], qi[1]
+        a = (q2 - q1) / (p2 - p1) if p2 != p1 else 0.0
+        hp, hq = _track_extension(P, horizontal, p1, reach, -SCALE,
+                                  p1, q1, a)
+        p1, q1, p2, q2 = pi[-2], qi[-2], pi[-1], qi[-1]
+        a = (q2 - q1) / (p2 - p1) if p2 != p1 else 0.0
+        tp, tq = _track_extension(P, horizontal, p2, reach, SCALE,
+                                  p1, q1, a)
+        ps = np.concatenate((hp[::-1], ps, tp))
+        qs = np.concatenate((hq[::-1], qs, tq))
+    if horizontal:
+        return ps, qs, direction, w, h
+    return qs, ps, direction, w, h
 
 
 def create_chainid_map(P: Page, chains: list[list[int]], ratio: float = 1.0,
@@ -755,49 +768,91 @@ def create_chainid_map(P: Page, chains: list[list[int]], ratio: float = 1.0,
     """Chain-id raster: the spatial index that turns every probe join into
     an O(1) lookup (create_chainid_map search_loop.cpp:451-522). Track
     lines are stamped with a transverse band of size/3*ratio, then each
-    chained non-ruby box's rectangle is stamped."""
+    chained non-ruby box's rectangle is stamped.
+
+    The raster is a pure function of the arguments plus ``P.direction``,
+    ``P.double_line``, the ruby bits of ``P.subtype`` and
+    ``P.lineblocker`` (box geometry never changes), so the last build is
+    kept on the page, keyed on the content of exactly those inputs, and
+    returned read-only."""
+    key = (tuple(map(tuple, chains)), ratio, extra_len)
+    state = (P.direction, P.double_line, (P.subtype & 6) == 6,
+             P.lineblocker)
+    memo = P.cmap_memo
+    if memo is not None and memo[0] == key and all(
+            np.array_equal(a, b) for a, b in zip(memo[1], state)):
+        return memo[2]
+    cmap = _build_chainid_map(P, chains, ratio, extra_len)
+    cmap.setflags(write=False)
+    P.cmap_memo = (key, tuple(np.array(a) for a in state), cmap)
+    return cmap
+
+
+def _first_claim(cmap: np.ndarray, flat: np.ndarray, ids: np.ndarray
+                 ) -> None:
+    """Write ``ids`` into the still-free cells ``flat`` of ``cmap``, first
+    writer wins. ``ids`` must not decrease in writing order, so the first
+    writer of a cell is its smallest id."""
+    free = cmap.ravel()[flat] < 0
+    first = np.full(cmap.size, _NO_WRITER, dtype=np.int64)
+    np.minimum.at(first, flat[free], ids[free])
+    won = np.nonzero(first < _NO_WRITER)[0]
+    cmap.ravel()[won] = first[won]
+
+
+def _rect_cells(left: np.ndarray, right: np.ndarray, top: np.ndarray,
+                bottom: np.ndarray, W: int) -> tuple[np.ndarray, np.ndarray]:
+    """Flat cell indices of the half-open rectangles [top, bottom) x
+    [left, right), rectangle by rectangle in row-major order, and the
+    rectangle each cell belongs to."""
+    wid = np.maximum(right - left, 0)
+    cnt = wid * np.maximum(bottom - top, 0)
+    r = np.repeat(np.arange(len(cnt)), cnt)
+    k = np.arange(len(r)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    return (top[r] + k // wid[r]) * W + left[r] + k % wid[r], r
+
+
+def _build_chainid_map(P: Page, chains: list[list[int]], ratio: float,
+                       extra_len: int) -> np.ndarray:
     cmap = np.full((P.H, P.W), -1, dtype=np.int32)
+    # track bands: every chain's (point, offset) cells in chain order; a
+    # cell keeps the first chain that reaches it
+    xs_all, ys_all, ids, bands, horiz = [], [], [], [], []
     for chainid, chain in enumerate(chains):
         if not chain:
             continue
         xs, ys, direction, w, h = make_track_line(P, chains, chainid,
                                                   extra_len)
-        if not xs:
+        n = len(xs)
+        if not n:
             continue
-        s_s = max(w, h)
-        band = int(s_s / 3 / SCALE * ratio)
-        # vectorized band fill: one fancy assignment per band offset
-        # (duplicate indices within one chain write the same value, so
-        # last-wins fancy indexing is equivalent to the scalar loop)
-        xa = np.asarray(xs, dtype=np.int64) // SCALE
-        ya = np.asarray(ys, dtype=np.int64) // SCALE
+        xs_all.append(xs)
+        ys_all.append(ys)
+        ids.append(np.full(n, chainid, dtype=np.int64))
+        bands.append(np.full(n, int(max(w, h) / 3 / SCALE * ratio),
+                             dtype=np.int64))
+        horiz.append(np.full(n, abs(direction) < M_PI_4))
+    if xs_all:
+        xa = np.concatenate(xs_all) // SCALE
+        ya = np.concatenate(ys_all) // SCALE
         inb = (xa >= 0) & (xa < P.W) & (ya >= 0) & (ya < P.H)
         xa, ya = xa[inb], ya[inb]
-        if abs(direction) < M_PI_4:
-            for dy in range(-band, band):
-                yy = ya + dy
-                m = (yy >= 0) & (yy < P.H)
-                sel_y, sel_x = yy[m], xa[m]
-                free = cmap[sel_y, sel_x] < 0
-                cmap[sel_y[free], sel_x[free]] = chainid
-        else:
-            for dx in range(-band, band):
-                xx = xa + dx
-                m = (xx >= 0) & (xx < P.W)
-                sel_y, sel_x = ya[m], xx[m]
-                free = cmap[sel_y, sel_x] < 0
-                cmap[sel_y[free], sel_x[free]] = chainid
-    # box-rect stamping: bounds computed vectorized over all chained
-    # non-ruby boxes (the per-box slice write itself stays — rects vary)
-    all_b: list[int] = []
-    all_c: list[int] = []
-    for chainid, chain in enumerate(chains):
-        for boxid in chain:
-            all_b.append(boxid)
-            all_c.append(chainid)
-    if all_b:
-        bb = np.asarray(all_b, dtype=np.int64)
-        cc_ids = np.asarray(all_c, dtype=np.int64)
+        cid = np.concatenate(ids)[inb]
+        band = np.concatenate(bands)[inb]
+        hz = np.concatenate(horiz)[inb]
+        reps = 2 * band
+        pt = np.repeat(np.arange(len(xa)), reps)
+        off = (np.arange(len(pt)) - np.repeat(np.cumsum(reps) - reps, reps)
+               - band[pt])
+        rows = ya[pt] + np.where(hz[pt], off, 0)
+        cols = xa[pt] + np.where(hz[pt], 0, off)
+        ok = (rows >= 0) & (rows < P.H) & (cols >= 0) & (cols < P.W)
+        _first_claim(cmap, rows[ok] * P.W + cols[ok], cid[pt][ok])
+    # box rectangles of the chained non-ruby boxes, in chain order
+    bb = np.fromiter((b for c in chains for b in c), dtype=np.int64)
+    if len(bb):
+        cc_ids = np.repeat(np.arange(len(chains)),
+                           [len(c) for c in chains])
         keep = (P.subtype[bb] & 6) != 6
         bb, cc_ids = bb[keep], cc_ids[keep]
         left = np.maximum(
@@ -808,52 +863,38 @@ def create_chainid_map(P: Page, chains: list[list[int]], ratio: float = 1.0,
             ((P.cy[bb] - P.h[bb] / 2) / SCALE).astype(np.int64), 0)
         bottom = np.minimum(
             ((P.cy[bb] + P.h[bb] / 2) / SCALE).astype(np.int64), P.H)
-        for li, ri, ti, bi, ci in zip(left.tolist(), right.tolist(),
-                                      top.tolist(), bottom.tolist(),
-                                      cc_ids.tolist()):
-            if li >= ri or ti >= bi:
-                continue
-            view = cmap[ti:bi, li:ri]
-            view[view < 0] = ci
+        flat, r = _rect_cells(left, right, top, bottom, P.W)
+        _first_claim(cmap, flat, cc_ids[r])
     return cmap
 
 
 # ---------------------------------------------------------------- search_loop
 
-def _chain_max_wh(P: Page, chain: list[int]) -> tuple[float, float]:
-    """A4 per-chain extrema (transform_reduce search_loop.cpp:594-605)."""
-    w = max((P.w[i] for i in chain), default=0.0)
-    h = max((P.h[i] for i in chain), default=0.0)
-    return w, h
-
-
-def _ema_toward_front(P: Page, chain: list[int], axis: np.ndarray) -> float:
+def _ema_toward_front(axis: list[float], chain: list[int]) -> float:
     """A6 EMA scan folded back-to-front: anchor for the chain start
     (combine_chains search_loop.cpp:607-613)."""
-    v = float(axis[chain[-1]])
+    v = axis[chain[-1]]
     for boxid in reversed(chain):
-        v = 0.25 * v + 0.75 * float(axis[boxid])
+        v = 0.25 * v + 0.75 * axis[boxid]
     return v
 
 
-def _ema_toward_back(P: Page, chain: list[int], axis: np.ndarray) -> float:
+def _ema_toward_back(axis: list[float], chain: list[int]) -> float:
     """A6 EMA scan folded front-to-back: anchor for the chain end
     (combine_chains search_loop.cpp:615-619)."""
-    v = float(axis[chain[0]])
+    v = axis[chain[0]]
     for boxid in chain:
-        v = 0.25 * v + 0.75 * float(axis[boxid])
+        v = 0.25 * v + 0.75 * axis[boxid]
     return v
 
 
-def _mean_gap(P: Page, chain: list[int], horizontal: bool) -> float:
+def _mean_gap(axis: list[float], size: list[float], chain: list[int]
+              ) -> float:
     """A7 mean positive inter-box gap along the chain axis
     (combine_chains search_loop.cpp:621-632)."""
     total = 0.0
     for a, b in zip(chain, chain[1:]):
-        if horizontal:
-            g = (P.cx[b] - P.w[b] / 2) - (P.cx[a] + P.w[a] / 2)
-        else:
-            g = (P.cy[b] - P.h[b] / 2) - (P.cy[a] + P.h[a] / 2)
+        g = (axis[b] - size[b] / 2) - (axis[a] + size[a] / 2)
         if g > 0:
             total += g
     return max(0.0, total / (len(chain) - 1)) if len(chain) > 1 else 0.0
@@ -907,157 +948,172 @@ def combine_chains(P: Page, chains: list[list[int]]) -> None:
     in an 11-point transverse band around the EMA anchor (A6); a unique
     same-direction same-double_line hit whose EMA anchor is within
     max(h, h_other) merges. Iterates (via process_merge) to fixpoint."""
-    blocker = P.lineblocker
-    H, W = P.H, P.W
     while True:
         fix_chain_info(P, chains)
         cmap = create_chainid_map(P, chains)
-        merge_chain = [-1] * len(chains)
-        for chainid, chain in enumerate(chains):
-            if not chain:
-                continue
-            boxid1 = chain[0]
-            boxid2 = chain[-1]
-            w, h = _chain_max_wh(P, chain)
-            if abs(P.direction[boxid1]) < M_PI_4:
-                start_cy0 = _ema_toward_front(P, chain, P.cy)
-                end_cy0 = _ema_toward_back(P, chain, P.cy)
-                space = _mean_gap(P, chain, True)
-
-                # head: search left (search_loop.cpp:640-690)
-                other1: list[int] = []
-                done: list[int] = []
-                blocked = False
-                for xs in range(0, int((w + space) * 3.0), SCALE):
-                    x = int((P.cx[boxid1] - w / 2 - xs) / SCALE)
-                    if x < 0 or x >= W:
-                        continue
-                    for yk in range(-5, 6):
-                        y = int((start_cy0 + h / 8.0 * yk / 5) / SCALE)
-                        if y < 0 or y >= H:
-                            continue
-                        if blocker[y, x]:
-                            other1 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other1:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) < M_PI_4 \
-                                    and P.double_line[och[-1]] == P.double_line[boxid1]:
-                                h1 = max(P.h[i] for i in och)
-                                end_cy1 = _ema_toward_back(P, och, P.cy)
-                                if abs(start_cy0 - end_cy1) < max(h, h1):
-                                    other1.append(oc)
-                                    continue
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other1) == 1:
-                    merge_chain[chainid] = other1[0]
-
-                # tail: search right (search_loop.cpp:693-745)
-                other2: list[int] = []
-                blocked = False
-                for xs in range(0, int((w + space) * 3.0), SCALE):
-                    x = int((P.cx[boxid2] + w / 2 + xs) / SCALE)
-                    if x < 0 or x >= W:
-                        continue
-                    for yk in range(-5, 6):
-                        y = int((end_cy0 + h / 8.0 * yk / 5) / SCALE)
-                        if y < 0 or y >= H:
-                            continue
-                        if blocker[y, x]:
-                            other2 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other2:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) < M_PI_4 \
-                                    and P.double_line[och[0]] == P.double_line[boxid2]:
-                                h1 = max(P.h[i] for i in och)
-                                start_cy1 = _ema_toward_front(P, och, P.cy)
-                                if abs(end_cy0 - start_cy1) < max(h, h1):
-                                    other2.append(oc)
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other2) == 1:
-                    merge_chain[other2[0]] = chainid
-            else:
-                start_cx0 = _ema_toward_front(P, chain, P.cx)
-                end_cx0 = _ema_toward_back(P, chain, P.cx)
-                space = _mean_gap(P, chain, False)
-
-                # head: search up (search_loop.cpp:779-828)
-                other1 = []
-                done = []
-                blocked = False
-                for ys in range(0, int((h + space) * 3.0), SCALE):
-                    y = int((P.cy[boxid1] - h / 2 - ys) / SCALE)
-                    if y < 0 or y >= H:
-                        continue
-                    for xk in range(-5, 6):
-                        x = int((start_cx0 + w / 8.0 * xk / 5) / SCALE)
-                        if x < 0 or x >= W:
-                            continue
-                        if blocker[y, x]:
-                            other1 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other1:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) > M_PI_4 \
-                                    and P.double_line[och[-1]] == P.double_line[boxid1]:
-                                w1 = max(P.w[i] for i in och)
-                                end_cx1 = _ema_toward_back(P, och, P.cx)
-                                if abs(start_cx0 - end_cx1) < max(w, w1):
-                                    other1.append(oc)
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other1) == 1:
-                    merge_chain[chainid] = other1[0]
-
-                # tail: search down (search_loop.cpp:831-875)
-                other2 = []
-                blocked = False
-                for ys in range(0, int((h + space) * 3.0), SCALE):
-                    y = int((P.cy[boxid2] + h / 2 + ys) / SCALE)
-                    if y < 0 or y >= H:
-                        continue
-                    for xk in range(-5, 6):
-                        x = int((end_cx0 + w / 8.0 * xk / 5) / SCALE)
-                        if x < 0 or x >= W:
-                            continue
-                        if blocker[y, x]:
-                            other2 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other2:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) > M_PI_4 \
-                                    and P.double_line[och[0]] == P.double_line[boxid2]:
-                                w1 = max(P.w[i] for i in och)
-                                start_cx1 = _ema_toward_front(P, och, P.cx)
-                                if abs(end_cx0 - start_cx1) < max(w, w1):
-                                    other2.append(oc)
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other2) == 1:
-                    merge_chain[other2[0]] = chainid
-
+        merge_chain = merge_targets(P, chains, cmap)
         if all(m == -1 for m in merge_chain):
             break
         process_merge(chains, merge_chain)
+
+
+_PROBE_K = np.arange(-5, 6)  # the 11 transverse probe offsets
+
+
+def merge_targets(P: Page, chains: list[list[int]], cmap: np.ndarray
+                  ) -> list[int]:
+    """One combine_chains pass: the merge edge vector (``merge_chain``).
+
+    Head (search_loop.cpp:640-690, :779-828) and tail (:693-745,
+    :831-875) probe walks of every chain are one (walk, step, offset)
+    grid; only grid cells that can decide a walk — a blocker or a foreign
+    chain id — are replayed scalar-side, in walk order, with the
+    reference's state: ``done`` is shared by a chain's head and tail walk,
+    a walk stops after the first column that leaves ``done`` non-empty,
+    and an accepted hit of the horizontal head probe does not enter
+    ``done`` (so it does not stop the walk) while every other accepted
+    hit does."""
+    merge_chain = [-1] * len(chains)
+    live = [c for c in range(len(chains)) if chains[c]]
+    if not live:
+        return merge_chain
+    cx, cy = P.cx.tolist(), P.cy.tolist()
+    bw, bh = P.w.tolist(), P.h.tolist()
+    dirs = P.direction.tolist()
+    dl = P.double_line.tolist()
+    wmax = {c: max(bw[i] for i in chains[c]) for c in live}
+    hmax = {c: max(bh[i] for i in chains[c]) for c in live}
+    horiz = {c: abs(dirs[chains[c][0]]) < M_PI_4 for c in live}
+
+    # per walk (2 per live chain: head, tail): axis base, step sign,
+    # step count, transverse anchor and band size
+    base, sign, nstep, anchor, band, whoriz, wchain = ([] for _ in range(7))
+    anchors = {}
+    for c in live:
+        chain = chains[c]
+        w, h = wmax[c], hmax[c]
+        if horiz[c]:
+            start0, end0 = (_ema_toward_front(cy, chain),
+                            _ema_toward_back(cy, chain))
+            reach = int((w + _mean_gap(cx, bw, chain)) * 3.0)
+            base += [cx[chain[0]] - w / 2, cx[chain[-1]] + w / 2]
+            band += [h, h]
+        else:
+            start0, end0 = (_ema_toward_front(cx, chain),
+                            _ema_toward_back(cx, chain))
+            reach = int((h + _mean_gap(cy, bh, chain)) * 3.0)
+            base += [cy[chain[0]] - h / 2, cy[chain[-1]] + h / 2]
+            band += [w, w]
+        anchors[c] = (start0, end0)
+        n = len(range(0, reach, SCALE))
+        sign += [-1, 1]
+        nstep += [n, n]
+        anchor += [start0, end0]
+        whoriz += [horiz[c], horiz[c]]
+        wchain += [c, c]
+
+    nstep_a = np.asarray(nstep, dtype=np.int64)
+    walk = np.repeat(np.arange(len(nstep)), nstep_a)
+    step = (np.arange(len(walk))
+            - np.repeat(np.cumsum(nstep_a) - nstep_a, nstep_a)) * SCALE
+    outer = ((np.asarray(base)[walk] + np.asarray(sign)[walk] * step)
+             / SCALE).astype(np.int64)
+    inner = ((np.asarray(anchor)[:, None]
+              + np.asarray(band)[:, None] / 8.0 * _PROBE_K / 5)
+             / SCALE).astype(np.int64)[walk]
+    hz = np.asarray(whoriz)[walk]
+    outer_ok = (outer >= 0) & (outer < np.where(hz, P.W, P.H))
+    hz2 = hz[:, None]
+    x = np.where(hz2, outer[:, None], inner)
+    y = np.where(hz2, inner, outer[:, None])
+    ok = outer_ok[:, None] & (x >= 0) & (x < P.W) & (y >= 0) & (y < P.H)
+    x = np.where(ok, x, 0)
+    y = np.where(ok, y, 0)
+    blk = ok & P.lineblocker[y, x]
+    oc = cmap[y, x]
+    own = np.asarray(wchain)[walk][:, None]
+    rows, ks = np.nonzero(blk | (ok & (oc >= 0) & (oc != own)))
+    ev_walk = walk[rows].tolist()
+    ev_row = rows.tolist()
+    ev_blk = blk[rows, ks].tolist()
+    ev_oc = oc[rows, ks].tolist()
+    # first in-page column of each walk
+    ok_rows = np.nonzero(outer_ok)[0]
+    starts = np.cumsum(nstep_a) - nstep_a
+    pos = np.searchsorted(ok_rows, starts)
+    first_col = [int(ok_rows[p]) if p < len(ok_rows) and
+                 ok_rows[p] < s + n else -1
+                 for p, s, n in zip(pos.tolist(), starts.tolist(), nstep)]
+    bounds = np.searchsorted(walk[rows], np.arange(len(nstep) + 1)).tolist()
+
+    ema_cache: dict[tuple[int, bool, bool], float] = {}
+
+    def ema(c: int, front: bool, on_cy: bool) -> float:
+        key = (c, front, on_cy)
+        if key not in ema_cache:
+            axis = cy if on_cy else cx
+            ema_cache[key] = (_ema_toward_front(axis, chains[c]) if front
+                              else _ema_toward_back(axis, chains[c]))
+        return ema_cache[key]
+
+    def accept(c: int, head: bool, oc_v: int) -> bool:
+        och = chains[oc_v]
+        if not och:
+            return False
+        d = abs(dirs[och[-1]])
+        if horiz[c]:
+            if not d < M_PI_4:
+                return False
+            size, size1 = hmax[c], hmax[oc_v]
+        else:
+            if not d > M_PI_4:
+                return False
+            size, size1 = wmax[c], wmax[oc_v]
+        if head:
+            if dl[och[-1]] != dl[chains[c][0]]:
+                return False
+            a0, a1 = anchors[c][0], ema(oc_v, False, horiz[c])
+        else:
+            if dl[och[0]] != dl[chains[c][-1]]:
+                return False
+            a0, a1 = anchors[c][1], ema(oc_v, True, horiz[c])
+        return abs(a0 - a1) < max(size, size1)
+
+    def replay(g: int, c: int, head: bool, done: list[int]) -> list[int]:
+        lo, hi = bounds[g], bounds[g + 1]
+        only = first_col[g] if done else None
+        other: list[int] = []
+        col = None
+        for r, is_blk, oc_v in zip(ev_row[lo:hi], ev_blk[lo:hi],
+                                   ev_oc[lo:hi]):
+            if only is not None and r != only:
+                if r > only:
+                    break
+                continue
+            if r != col:
+                if done and col is not None:
+                    break
+                col = r
+            if is_blk:
+                return []
+            if oc_v in done or oc_v in other:
+                continue
+            if accept(c, head, oc_v):
+                other.append(oc_v)
+                if head and horiz[c]:
+                    continue
+            done.append(oc_v)
+        return other
+
+    for i, c in enumerate(live):
+        done: list[int] = []
+        other1 = replay(2 * i, c, True, done)
+        if len(other1) == 1:
+            merge_chain[c] = other1[0]
+        other2 = replay(2 * i + 1, c, False, done)
+        if len(other2) == 1:
+            merge_chain[other2[0]] = c
+    return merge_chain
 
 
 def count_unbind(P: Page, chains: list[list[int]]) -> int:
@@ -1508,12 +1564,47 @@ def register_chainid(P: Page, chains: list[list[int]]) -> None:
 def renumber_chain(P: Page) -> int:
     """A14 dense renumber of surviving chain ids in first-appearance order
     then sorted (renumber_chain after_search.cpp:62-79)."""
-    used = sorted({int(i) for i in P.idx if i >= 0})
-    remap = {old: new for new, old in enumerate(used)}
-    for i in range(P.n):
-        if P.idx[i] >= 0:
-            P.idx[i] = remap[int(P.idx[i])]
+    live = P.idx >= 0
+    used, P.idx[live] = np.unique(P.idx[live], return_inverse=True)
     return len(used)
+
+
+def ruby_candidates(P: Page, chainid: int, xs: np.ndarray, ys: np.ndarray,
+                    direction: float, w: float, h: float, cmap: np.ndarray,
+                    idimage: np.ndarray) -> list[int]:
+    """Unclaimed ruby boxes in the band above (horizontal) / right of
+    (vertical) one chain's track line (ruby_search.cpp:12-150), in
+    discovery order. Per track point the walk climbs k = 1..K-1
+    transverse cells, stopping at the first blocker or foreign-chain cell
+    — a prefix-AND along each row of the (point, k) grid, whose row-major
+    hits are the scalar walk's discovery order."""
+    horizontal = abs(direction) < M_PI_4
+    K = max(1, int((h if horizontal else w) * 1.25 / SCALE))
+    xa = xs // SCALE
+    ya = ys // SCALE
+    inb = (xa >= 0) & (xa < P.W) & (ya >= 0) & (ya < P.H)
+    xa, ya = xa[inb], ya[inb]
+    if not len(xa) or K <= 1:
+        return []
+    k = np.arange(1, K)
+    if horizontal:
+        rr = ya[:, None] - k
+        cc = np.broadcast_to(xa[:, None], rr.shape)
+        on = rr >= 0
+    else:
+        cc = xa[:, None] + k
+        rr = np.broadcast_to(ya[:, None], cc.shape)
+        on = cc < P.W
+    rr = np.where(on, rr, 0)
+    cc = np.where(on, cc, 0)
+    oc = cmap[rr, cc]
+    clear = on & ~P.lineblocker[rr, cc] & ~((oc >= 0) & (oc != chainid))
+    alive = np.logical_and.accumulate(clear, axis=1)
+    oid = idimage[rr, cc].astype(np.int64)
+    ok = oid >= 0
+    oid = np.where(ok, oid, 0)
+    hit = alive & ok & ((P.subtype[oid] & 6) == 6) & (P.idx[oid] < 0)
+    return list(dict.fromkeys(oid[hit].tolist()))
 
 
 def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
@@ -1533,51 +1624,8 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
             continue
         sort_chain(chain, P)
         xs, ys, direction, w, h = make_track_line(P, chains, chainid, 1)
-        # vectorized band probe: per track point the walk climbs k =
-        # 1..K-1 transverse cells, stopping at the first blocker or
-        # foreign-chain cell — a per-column prefix-AND over the (K, n)
-        # cell grid; candidate extraction preserves the scalar loop's
-        # (point, k) discovery order exactly
-        horizontal = abs(direction) < M_PI_4
-        K = max(1, int((h if horizontal else w) * 1.25 / SCALE))
-        xa = np.asarray(xs, dtype=np.int64) // SCALE
-        ya = np.asarray(ys, dtype=np.int64) // SCALE
-        inb = (xa >= 0) & (xa < P.W) & (ya >= 0) & (ya < P.H)
-        xa, ya = xa[inb], ya[inb]
-        ruby_boxid: list[int] = []
-        if len(xa) and K > 1:
-            alive = np.ones(len(xa), dtype=bool)
-            cand: list[tuple[int, int, int]] = []  # (point, k, oid)
-            for k in range(1, K):
-                if horizontal:
-                    rq, cq = ya - k, xa
-                    ok = rq >= 0
-                else:
-                    rq, cq = ya, xa + k
-                    ok = cq < P.W
-                alive = alive & ok
-                if not alive.any():
-                    break
-                rr = np.where(alive, rq, 0)
-                cc = np.where(alive, cq, 0)
-                barrier = P.lineblocker[rr, cc]
-                oc = cmap[rr, cc]
-                barrier |= (oc >= 0) & (oc != chainid)
-                alive = alive & ~barrier
-                oid = idimage[rr, cc]
-                hit = alive & (oid >= 0)
-                if hit.any():
-                    ids = oid[hit].astype(np.int64)
-                    good = (((P.subtype[ids] & 6) == 6)
-                            & (P.idx[ids] < 0))
-                    for pt, o in zip(np.nonzero(hit)[0][good].tolist(),
-                                     ids[good].tolist()):
-                        cand.append((pt, k, o))
-            seen: set[int] = set()
-            for _pt, _k, o in sorted(cand):
-                if o not in seen:
-                    seen.add(o)
-                    ruby_boxid.append(o)
+        ruby_boxid = ruby_candidates(P, chainid, xs, ys, direction, w, h,
+                                     cmap, idimage)
         for rid in ruby_boxid:
             if P.idx[rid] >= 0:
                 if rid in chains[P.idx[rid]]:
@@ -1977,6 +2025,53 @@ def _overlap(a1: float, a2: float, b1: float, b2: float) -> bool:
     return min(a2, b2) - max(a1, b1) > 0
 
 
+def _plain_line_stats(P: Page, n_lines: int):
+    """Per line id (``P.idx``) over the line's plain boxes (no ruby, no
+    alone ruby): box count, max box size, extent (x1, y1, x2, y2) and the
+    last (highest-id) box, -1 for none. Also returns the plain boxes."""
+    plain = np.nonzero((P.idx >= 0) & ((P.subtype & 6) != 6)
+                       & ((P.subtype & SUBTYPE_ALONE_RUBY) == 0))[0]
+    pid = P.idx[plain]
+    count = np.bincount(pid, minlength=n_lines)
+    size = np.zeros(n_lines)
+    np.maximum.at(size, pid, np.maximum(P.w[plain], P.h[plain]))
+    ext = []
+    for v, init, fold in ((P.cx[plain] - P.w[plain] / 2, math.inf, np.minimum),
+                          (P.cy[plain] - P.h[plain] / 2, math.inf, np.minimum),
+                          (P.cx[plain] + P.w[plain] / 2, -math.inf, np.maximum),
+                          (P.cy[plain] + P.h[plain] / 2, -math.inf, np.maximum)):
+        e = np.full(n_lines, init)
+        fold.at(e, pid, v)
+        ext.append(e)
+    last = np.full(n_lines, -1, dtype=np.int64)
+    last[pid] = plain  # ascending box ids: the last write is the max
+    return plain, count, size, ext, last
+
+
+def section_params(P: Page) -> dict[int, _LineParam]:
+    """Per line id, ascending: direction (0 horizontal, 1 vertical; lines
+    of at most one plain box take the page's majority direction), plain
+    box count, size and extent — renumber_id's parameter pass
+    (make_block.cpp:600-690)."""
+    live = P.idx[P.idx >= 0]
+    n_lines = int(live.max()) + 1 if len(live) else 0
+    plain, count, size, ext, last = _plain_line_stats(P, n_lines)
+    vertical = (P.subtype & SUBTYPE_VERTICAL) != 0
+    major_direction = len(plain) - 2 * int(vertical[plain].sum())
+    ext = [e.tolist() for e in ext]
+    params: dict[int, _LineParam] = {}
+    for cid in np.unique(live).tolist():
+        lp = params[cid] = _LineParam()
+        lp.cx1, lp.cy1, lp.cx2, lp.cy2 = (e[cid] for e in ext)
+        lp.size = float(size[cid])
+        lp.count = int(count[cid])
+        if lp.count > 1:
+            lp.d = 1 if vertical[last[cid]] else 0
+        else:
+            lp.d = 0 if major_direction >= 0 else 1
+    return params
+
+
 def renumber_id(P: Page, id_max: int) -> int:
     """Dense chain renumber + section (column) assignment — a deterministic
     re-expression of renumber_id (make_block.cpp:580-1359).
@@ -1998,31 +2093,8 @@ def renumber_id(P: Page, id_max: int) -> int:
     common baseline); ragged bottoms mean a grid of short cells — a
     table — which shares ONE section and reads row-major via the
     reference's insertion order (_table_interleave)."""
-    params: dict[int, _LineParam] = {}
-    chain_ids: list[int] = []
-    major_direction = 0
-    for i in range(P.n):
-        if P.idx[i] < 0:
-            continue
-        cid = int(P.idx[i])
-        if cid not in params:
-            params[cid] = _LineParam()
-            chain_ids.append(cid)
-        if P.is_ruby(i) or (P.subtype[i] & SUBTYPE_ALONE_RUBY):
-            continue
-        lp = params[cid]
-        lp.d = 0 if (P.subtype[i] & SUBTYPE_VERTICAL) == 0 else 1
-        major_direction += 1 if lp.d == 0 else -1
-        lp.cx1 = min(lp.cx1, P.cx[i] - P.w[i] / 2)
-        lp.cy1 = min(lp.cy1, P.cy[i] - P.h[i] / 2)
-        lp.cx2 = max(lp.cx2, P.cx[i] + P.w[i] / 2)
-        lp.cy2 = max(lp.cy2, P.cy[i] + P.h[i] / 2)
-        lp.size = max(lp.size, P.w[i], P.h[i])
-        lp.count += 1
-    for lp in params.values():
-        if lp.count <= 1:
-            lp.d = 0 if major_direction >= 0 else 1
-
+    params = section_params(P)
+    chain_ids = list(params)
     chain_ids.sort()
     horiz = [c for c in chain_ids if params[c].d == 0 and params[c].count > 0]
     vert = [c for c in chain_ids if params[c].d == 1 and params[c].count > 0]
@@ -2152,146 +2224,137 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     parallel line; separator pixels and a >ALLOW_SIZEDIFF size difference
     reject; a perpendicular line breaks the probe in BOTH orientations
     (the reference consults the blocker in both families —
-    make_block.cpp:77,101,157,183)."""
+    make_block.cpp:77,101,157,183).
+
+    Every scan of the page is one (axis cell, depth) grid: a cell's
+    transverse walk is a prefix-alive pass over its row — barriers
+    (blocker, perpendicular line) pre-compute; accept-candidates are then
+    replayed scalar-side in exact (scan, axis cell, depth) order, because
+    whether an acceptance breaks the walk depends on the mutable dedup
+    state (a seen chain lets the reference keep walking).
+    Cell-stride note: the reference steps per PIXEL (make_block.cpp:67,91)
+    but every probe is a cell lookup, so SCALE-strided steps visit the
+    identical cell sequence."""
     scanwidth = 0.5 + ALLOWWIDTH_NEXT_BLOCK
     chain_next: list[list[int]] = [[] for _ in range(id_max)]
     chain_prev: list[list[int]] = [[] for _ in range(id_max)]
     dvals = np.array([lp.d for lp in lineparams], dtype=np.int64)
     sizes = np.array([lp.size for lp in lineparams], dtype=np.float64)
 
-    def _scan(chainid: int, steps: np.ndarray, a: float, c1: float,
-              t1: float, horizontal: bool, K: int, lp_size: float) -> None:
-        """One scan direction, vectorized: the transverse walk per outer
-        cell is a prefix-alive pass over a (K, n) grid — barriers
-        (blocker, perpendicular line) pre-compute; accept-candidates are
-        then replayed scalar-side in exact (outer, depth) order, because
-        whether an acceptance breaks the walk depends on the mutable
-        dedup state (a seen chain lets the reference keep walking).
-        Cell-stride note: the reference steps per PIXEL
-        (make_block.cpp:67,91) but every probe is a cell lookup, so
-        SCALE-strided steps visit the identical cell sequence."""
-        if len(steps) == 0 or K <= 0:
-            return
-        t = a * (steps - c1) + t1
+    # per scan: chain, axis steps, baseline t = a * (step - p1) + t1,
+    # orientation, transverse depth K
+    scans: list[tuple] = []
+    for chainid in range(id_max):
+        chain = chains[chainid]
+        lp = lineparams[chainid]
+        if not chain or lp.d not in (1, 2):
+            continue
+        horizontal = lp.d == 2
+        idx = np.asarray(chain, dtype=np.int64)
+        s = np.maximum(P.w[idx], P.h[idx])
+        s_s = s.max()
+        with np.errstate(divide="ignore", invalid="ignore"):
+            odd = np.abs(s - s_s) / np.minimum(s, s_s) > 0.5
+        base = idx[~odd & ((P.subtype[idx] & 6) != 6)
+                   & ~(P.double_line[idx] > 0)]
+        if not len(base):
+            continue
         if horizontal:
-            xi = (steps / SCALE).astype(np.int64)
-            yi = (t / SCALE).astype(np.int64)
+            axis, cross, half = P.cx, P.cy, P.w / 2
         else:
-            xi = (t / SCALE).astype(np.int64)
-            yi = (steps / SCALE).astype(np.int64)
-        inb = (xi >= 0) & (xi < P.W) & (yi >= 0) & (yi < P.H)
-        xs_s = np.where(inb, xi, 0)
-        ys_s = np.where(inb, yi, 0)
-        blocked = inb & P.lineblocker[ys_s, xs_s]
-        nz = np.nonzero(blocked)[0]
-        cut = int(nz[0]) if len(nz) else len(steps)
-        walk = inb[:cut]
-        if not walk.any():
-            return
-        cols = xi[:cut][walk]
-        rows = yi[:cut][walk]
-        jidx = np.nonzero(walk)[0]
-        perp_d = 1 if horizontal else 2
-        alive = np.ones(len(cols), dtype=bool)
-        events: list[tuple[int, int, int]] = []
-        for k in range(K):
-            if horizontal:
-                rr, cc = rows + k, cols
-                alive = alive & (rr < P.H)
-            else:
-                rr, cc = rows, cols - k
-                alive = alive & (cc >= 0)
-            if not alive.any():
-                break
-            rr_s = np.where(alive, rr, 0)
-            cc_s = np.where(alive, cc, 0)
-            blk = alive & P.lineblocker[rr_s, cc_s]
-            oc = cmap[rr_s, cc_s]
-            foreign = alive & ~blk & (oc >= 0) & (oc != chainid)
-            if not foreign.any():
-                alive = alive & ~blk
-                continue
-            fj = np.nonzero(foreign)[0]
-            oc_f = oc[fj].astype(np.int64)
-            perp_f = dvals[oc_f] == perp_d
-            osz = sizes[oc_f]
-            denom = (np.minimum(lp_size, osz) if horizontal
-                     else np.maximum(lp_size, osz))
-            ratio = np.where(denom > 0,
-                             np.abs(osz - lp_size)
-                             / np.where(denom > 0, denom, 1.0), np.inf)
-            accept_f = ~perp_f & (ratio <= ALLOW_SIZEDIFF)
-            alive = alive & ~blk
-            if perp_f.any():
-                alive[fj[perp_f]] = False
-            for j, o in zip(fj[accept_f].tolist(),
-                            oc_f[accept_f].tolist()):
-                events.append((int(jidx[j]), k, int(o)))
-            # an acceptance only ends the walk when the chain is NEW —
-            # resolved below; deeper candidates stay collected
+            axis, cross, half = P.cy, P.cx, P.h / 2
+        # the baseline starts at the first base box, unless that box's
+        # start point is negative in both coordinates (then the next)
+        p1s = axis[base] - half[base]
+        t1s = cross[base]
+        neg = (p1s < 0) & (t1s < 0)
+        first = int(np.argmin(neg)) if not neg.all() else len(base) - 1
+        p1, t1 = p1s[first], t1s[first]
+        last = base[-1]
+        p2, t2 = axis[last] + half[last], cross[last]
+        if p2 - p1 < SCALE:
+            continue
+        a = (t2 - t1) / (p2 - p1)
+        if horizontal:
+            K = int(s_s / SCALE * scanwidth)  # range(yi, int(yi+c)) length
+        else:
+            # range(xi, int(xi-c), -1) spans ceil(c) cells (int()
+            # truncates toward zero; out-of-page cells are masked dead)
+            K = int(math.ceil(s_s / SCALE * scanwidth))
+        if K <= 0:
+            continue
+        mid = int((p1 + p2) / 2)
+        for steps in (np.arange(mid, int(p2 + s_s), SCALE, dtype=np.float64),
+                      np.arange(mid, int(p1 - s_s), -SCALE,
+                                dtype=np.float64)):
+            if len(steps):
+                scans.append((chainid, steps, a, p1, t1, horizontal, K,
+                              lp.size))
+    if not scans:
+        return chain_next, chain_prev
+
+    cid_s, steps_s, a_s, p1_s, t1_s, hz_s, K_s, size_s = zip(*scans)
+    a_s, p1_s, t1_s = (np.asarray(v) for v in (a_s, p1_s, t1_s))
+    cid_s, K_s = np.asarray(cid_s), np.asarray(K_s)
+    hz_s, size_s = np.asarray(hz_s), np.asarray(size_s, dtype=np.float64)
+    n_s = np.array([len(st) for st in steps_s])
+    sid = np.repeat(np.arange(len(scans)), n_s)
+    steps = np.concatenate(steps_s)
+    t = a_s[sid] * (steps - p1_s[sid]) + t1_s[sid]
+    hz = hz_s[sid]
+    p_cell = (steps / SCALE).astype(np.int64)
+    t_cell = (t / SCALE).astype(np.int64)
+    xi = np.where(hz, p_cell, t_cell)
+    yi = np.where(hz, t_cell, p_cell)
+    inb = (xi >= 0) & (xi < P.W) & (yi >= 0) & (yi < P.H)
+    blocked = inb & P.lineblocker[np.where(inb, yi, 0), np.where(inb, xi, 0)]
+    # a scan stops at its first in-page blocker cell
+    pos = np.arange(len(steps))
+    cut = np.full(len(scans), len(steps))
+    np.minimum.at(cut, sid[blocked], pos[blocked])
+    cells = np.nonzero(inb & (pos < cut[sid]))[0]
+    ssid = sid[cells]
+    jidx = cells - (np.cumsum(n_s) - n_s)[ssid]
+    rows, cols = yi[cells][:, None], xi[cells][:, None]
+
+    k = np.arange(K_s.max())
+    hz_r = hz_s[ssid][:, None]
+    rr = np.where(hz_r, rows + k, rows)
+    cc = np.where(hz_r, cols, cols - k)
+    on = (k < K_s[ssid][:, None]) & np.where(hz_r, rr < P.H, cc >= 0)
+    rr = np.where(on, rr, 0)
+    cc = np.where(on, cc, 0)
+    blk = P.lineblocker[rr, cc]
+    oc = cmap[rr, cc].astype(np.int64)
+    foreign = ~blk & (oc >= 0) & (oc != cid_s[ssid][:, None])
+    oc_f = np.where(foreign, oc, 0)
+    perp = foreign & (dvals[oc_f] == np.where(hz_r, 1, 2))
+    osz = sizes[oc_f]
+    lp_size = size_s[ssid][:, None]
+    denom = np.where(hz_r, np.minimum(lp_size, osz),
+                     np.maximum(lp_size, osz))
+    ratio = np.where(denom > 0,
+                     np.abs(osz - lp_size) / np.where(denom > 0, denom, 1.0),
+                     np.inf)
+    alive = on.copy()
+    alive[:, 1:] &= np.logical_and.accumulate(~(blk | perp), axis=1)[:, :-1]
+    er, ek = np.nonzero(alive & foreign & ~perp & (ratio <= ALLOW_SIZEDIFF))
+
+    # replay: an acceptance only ends a cell's walk when the chain is NEW
+    ev_scan = ssid[er]
+    bounds = np.searchsorted(ev_scan, np.arange(len(scans) + 1)).tolist()
+    ev_j, ev_k, ev_oc = jidx[er].tolist(), ek.tolist(), oc[er, ek].tolist()
+    for s, chainid in enumerate(cid_s.tolist()):
         done_depth: dict[int, int] = {}
-        for j, k, oc_v in sorted(events):
-            if j in done_depth and k > done_depth[j]:
+        for j, kk, oc_v in zip(ev_j[bounds[s]:bounds[s + 1]],
+                               ev_k[bounds[s]:bounds[s + 1]],
+                               ev_oc[bounds[s]:bounds[s + 1]]):
+            if j in done_depth and kk > done_depth[j]:
                 continue
             if oc_v not in chain_next[chainid]:
                 chain_next[chainid].append(oc_v)
                 chain_prev[oc_v].append(chainid)
-                done_depth[j] = k
-
-    for chainid in range(id_max):
-        chain = chains[chainid]
-        if not chain:
-            continue
-        lp = lineparams[chainid]
-        if lp.d == 2:
-            s_s = max(max(P.w[b], P.h[b]) for b in chain)
-            cx1 = cy1 = cx2 = cy2 = -1.0
-            for b in chain:
-                s = max(P.w[b], P.h[b])
-                if abs(s - s_s) / min(s, s_s) > 0.5:
-                    continue
-                if P.is_ruby(b) or P.double_line[b] > 0:
-                    continue
-                if cx1 < 0 and cy1 < 0:
-                    cx1 = P.cx[b] - P.w[b] / 2
-                    cy1 = P.cy[b]
-                cx2 = P.cx[b] + P.w[b] / 2
-                cy2 = P.cy[b]
-            if cx2 - cx1 < SCALE:
-                continue
-            a = (cy2 - cy1) / (cx2 - cx1)
-            K = int(s_s / SCALE * scanwidth)  # range(yi, int(yi+c)) length
-            mid = int((cx1 + cx2) / 2)
-            fwd = np.arange(mid, int(cx2 + s_s), SCALE, dtype=np.float64)
-            bwd = np.arange(mid, int(cx1 - s_s), -SCALE, dtype=np.float64)
-            _scan(chainid, fwd, a, cx1, cy1, True, K, lp.size)
-            _scan(chainid, bwd, a, cx1, cy1, True, K, lp.size)
-        elif lp.d == 1:
-            s_s = max(max(P.w[b], P.h[b]) for b in chain)
-            cx1 = cy1 = cx2 = cy2 = -1.0
-            for b in chain:
-                s = max(P.w[b], P.h[b])
-                if abs(s - s_s) / min(s, s_s) > 0.5:
-                    continue
-                if P.is_ruby(b) or P.double_line[b] > 0:
-                    continue
-                if cx1 < 0 and cy1 < 0:
-                    cx1 = P.cx[b]
-                    cy1 = P.cy[b] - P.h[b] / 2
-                cx2 = P.cx[b]
-                cy2 = P.cy[b] + P.h[b] / 2
-            if cy2 - cy1 < SCALE:
-                continue
-            a = (cx2 - cx1) / (cy2 - cy1)
-            # range(xi, int(xi-c), -1) spans ceil(c) cells (int() truncates
-            # toward zero; out-of-page cells are masked dead in _scan)
-            c = s_s / SCALE * scanwidth
-            K = int(math.ceil(c))
-            mid = int((cy1 + cy2) / 2)
-            fwd = np.arange(mid, int(cy2 + s_s), SCALE, dtype=np.float64)
-            bwd = np.arange(mid, int(cy1 - s_s), -SCALE, dtype=np.float64)
-            _scan(chainid, fwd, a, cy1, cx1, False, K, lp.size)
-            _scan(chainid, bwd, a, cy1, cx1, False, K, lp.size)
+                done_depth[j] = kk
     return chain_next, chain_prev
 
 
@@ -2410,6 +2473,126 @@ def block_chain_search(id_max: int, chain_next: list[list[int]],
     return block_chain
 
 
+def lines_of(P: Page, boxes: np.ndarray, id_max: int) -> list[list[int]]:
+    """``boxes`` grouped by line id (``P.idx``), each line in
+    (subidx, box id) order."""
+    if not id_max:
+        return []
+    boxes = boxes[np.lexsort((boxes, P.subidx[boxes], P.idx[boxes]))]
+    cuts = np.cumsum(np.bincount(P.idx[boxes], minlength=id_max))[:-1]
+    return [part.tolist() for part in np.split(boxes, cuts)]
+
+
+class _BlockParam:
+    __slots__ = ("d", "p", "sec", "count", "size",
+                 "x_min", "x_max", "y_min", "y_max")
+
+
+def block_lines(P: Page, id_max: int
+                ) -> tuple[list[list[int]], list[_LineParam]]:
+    """Each line's plain boxes (no ruby, no alone ruby) in (subidx, box)
+    order, and its parameters for the next-line scan: size, count,
+    direction (2 horizontal, 1 vertical, from the line's last box; 0 for
+    a single box) and warichu run count (make_block.cpp:1378-1443)."""
+    plain, count, size, _ext, last = _plain_line_stats(P, id_max)
+    chains = lines_of(P, plain, id_max)
+    lineparams = [_LineParam() for _ in range(id_max)]
+    dl = P.double_line.tolist()
+    for cid, lp in enumerate(lineparams):
+        lp.size = float(size[cid])
+        lp.count = int(count[cid])
+        if lp.count:
+            vertical = (P.subtype[last[cid]] & SUBTYPE_VERTICAL) != 0
+            lp.d = (1 if vertical else 2) if lp.count > 1 else 0
+        # warichu (double-line) runs
+        runs = count1 = count2 = 0
+        for b in chains[cid]:
+            if dl[b] == 0:
+                if count1 > 1 or count2 > 1:
+                    runs += 1
+                count1 = count2 = 0
+            elif dl[b] == 1:
+                count1 += 1
+            elif dl[b] == 2:
+                count2 += 1
+        if count1 > 1 or count2 > 1:
+            runs += 1
+        lp.doubleline = runs
+    return chains, lineparams
+
+
+def block_params(P: Page, blocks: list[list[int]], id_max: int
+                 ) -> list[_BlockParam]:
+    """A8 block bbox + stats (make_block.cpp:1489-1540) over the blocks'
+    boxes (alone rubies excluded); direction and section come from the
+    block's last box."""
+    block_of_chain = np.full(id_max + 1, -1, dtype=np.int64)
+    for bi, chains_in in enumerate(blocks):
+        block_of_chain[chains_in] = bi
+    # block of every box (the extra slot catches idx < 0)
+    box_block = np.where(P.idx >= 0, block_of_chain[P.idx], -1)
+    box_block[(P.subtype & SUBTYPE_ALONE_RUBY) != 0] = -1
+    ids = np.nonzero(box_block >= 0)[0]
+    bid = box_block[ids]
+    nb = len(blocks)
+    count = np.bincount(bid, minlength=nb)
+    size = np.zeros(nb)
+    np.maximum.at(size, bid, np.maximum(P.w[ids], P.h[ids]))
+    ext = []
+    for v, init, fold in ((P.cx[ids] - P.w[ids] / 2, P.W * SCALE, np.minimum),
+                          (P.cy[ids] - P.h[ids] / 2, P.H * SCALE, np.minimum),
+                          (P.cx[ids] + P.w[ids] / 2, 0.0, np.maximum),
+                          (P.cy[ids] + P.h[ids] / 2, 0.0, np.maximum)):
+        e = np.full(nb, float(init))
+        fold.at(e, bid, v)
+        ext.append(e.tolist())
+    last = np.full(nb, -1, dtype=np.int64)
+    last[bid] = ids  # ascending box ids: the last write is the max
+    bparams: list[_BlockParam] = []
+    for bi in range(nb):
+        bp = _BlockParam()
+        bp.p = 0
+        bp.count = int(count[bi])
+        bp.size = float(size[bi])
+        bp.x_min, bp.y_min, bp.x_max, bp.y_max = (e[bi] for e in ext)
+        if bp.count:
+            i = last[bi]
+            bp.d = 0 if (P.subtype[i] & SUBTYPE_VERTICAL) == 0 else 1
+            bp.sec = int(P.section[i])
+        else:
+            bp.d = bp.sec = 0
+        if bp.x_min > bp.x_max:
+            bp.x_min, bp.x_max = bp.x_max, bp.x_min
+        if bp.y_min > bp.y_max:
+            bp.y_min, bp.y_max = bp.y_max, bp.y_min
+        bparams.append(bp)
+    return bparams
+
+
+def number_blocks(P: Page, blocks: list[list[int]], block_idx: list[int],
+                  bparams: list[_BlockParam], id_max: int) -> None:
+    """Assign block numbers in reading order (make_block.cpp:1696-1715),
+    then renumber each block's lines densely (A14, :1717-1737): a line's
+    new idx is its rank among its block's distinct line ids."""
+    chain_remap = np.full(id_max, -1, dtype=np.int64)
+    chain_page = np.zeros(id_max, dtype=np.int64)
+    for renum, bi in enumerate(block_idx):
+        chain_remap[blocks[bi]] = renum
+        chain_page[blocks[bi]] = bparams[bi].p
+    live = np.nonzero(P.idx >= 0)[0]
+    P.block[live] = chain_remap[P.idx[live]]
+    P.page[live] = chain_page[P.idx[live]]
+    live = live[P.block[live] >= 0]
+    pairs = np.unique(np.stack([P.block[live], P.idx[live]], axis=1),
+                      axis=0)
+    if len(pairs):
+        head = np.searchsorted(pairs[:, 0], pairs[:, 0])
+        rank = np.arange(len(pairs)) - head
+        pos = np.searchsorted(pairs[:, 0] * (id_max + 1) + pairs[:, 1],
+                              P.block[live] * (id_max + 1) + P.idx[live])
+        P.idx[live] = rank[pos]
+
+
 def make_block(P: Page) -> None:
     """Block formation + reading order (make_block make_block.cpp:1364-1843):
     fixpoint of (renumber, section assign, next-line edges, tab-rejoin),
@@ -2420,57 +2603,12 @@ def make_block(P: Page) -> None:
         id_max = renumber_chain(P)
         id_max = renumber_id(P, id_max)
 
-        chains: list[list[int]] = [[] for _ in range(id_max)]
-        lineparams = [_LineParam() for _ in range(id_max)]
-        for i in range(P.n):
-            if P.idx[i] < 0:
-                continue
-            if P.is_ruby(i) or (P.subtype[i] & SUBTYPE_ALONE_RUBY):
-                continue
-            cid = int(P.idx[i])
-            chains[cid].append(i)
-            lp = lineparams[cid]
-            lp.size = max(lp.size, P.w[i], P.h[i])
-            lp.count += 1
-            if (P.subtype[i] & SUBTYPE_VERTICAL) == 0:
-                lp.d = 2 if len(chains[cid]) > 1 else 0
-            else:
-                lp.d = 1 if len(chains[cid]) > 1 else 0
-        for chain in chains:
-            chain.sort(key=lambda b: (P.subidx[b], b))
-
-        # warichu (double-line) run count per line (make_block.cpp:1417-1443)
-        for chain in chains:
-            if not chain:
-                continue
-            count = count1 = count2 = 0
-            cid = -1
-            for b in chain:
-                cid = int(P.idx[b])
-                if P.double_line[b] == 0:
-                    if count1 > 1 or count2 > 1:
-                        count += 1
-                    count1 = count2 = 0
-                elif P.double_line[b] == 1:
-                    count1 += 1
-                elif P.double_line[b] == 2:
-                    count2 += 1
-            if count1 > 1 or count2 > 1:
-                count += 1
-            if cid >= 0:
-                lineparams[cid].doubleline = count
-
+        chains, lineparams = block_lines(P, id_max)
         cmap = create_chainid_map(P, chains, 1.0, 0)
         chain_next, chain_prev = process_line(P, id_max, chains,
                                               lineparams, cmap)
 
-        full_chains: list[list[int]] = [[] for _ in range(id_max)]
-        for i in range(P.n):
-            if P.idx[i] < 0:
-                continue
-            full_chains[int(P.idx[i])].append(i)
-        for chain in full_chains:
-            chain.sort(key=lambda b: (P.subidx[b], b))
+        full_chains = lines_of(P, np.nonzero(P.idx >= 0)[0], id_max)
 
         if rechain_search(P, full_chains, chain_next, chain_prev):
             break
@@ -2483,48 +2621,7 @@ def make_block(P: Page) -> None:
 
     blocks = block_chain_search(id_max, chain_next, chain_prev)
 
-    # A8 block bbox + stats (make_block.cpp:1489-1540)
-    class _BlockParam:
-        __slots__ = ("d", "p", "sec", "count", "size",
-                     "x_min", "x_max", "y_min", "y_max")
-
-    bparams: list[_BlockParam] = []
-    for _ in blocks:
-        bp = _BlockParam()
-        bp.d = 0
-        bp.p = 0
-        bp.sec = 0
-        bp.count = 0
-        bp.size = 0.0
-        bp.x_min = P.W * SCALE
-        bp.y_min = P.H * SCALE
-        bp.x_max = 0.0
-        bp.y_max = 0.0
-        bparams.append(bp)
-    block_of_chain = [-1] * id_max
-    for bi, chains_in in enumerate(blocks):
-        for c in chains_in:
-            block_of_chain[c] = bi
-    for i in range(P.n):
-        if P.idx[i] < 0 or (P.subtype[i] & SUBTYPE_ALONE_RUBY):
-            continue
-        bi = block_of_chain[int(P.idx[i])]
-        if bi < 0:
-            continue
-        bp = bparams[bi]
-        bp.d = 0 if (P.subtype[i] & SUBTYPE_VERTICAL) == 0 else 1
-        bp.count += 1
-        bp.size = max(bp.size, P.w[i], P.h[i])
-        bp.sec = int(P.section[i])
-        bp.x_min = min(bp.x_min, P.cx[i] - P.w[i] / 2)
-        bp.y_min = min(bp.y_min, P.cy[i] - P.h[i] / 2)
-        bp.x_max = max(bp.x_max, P.cx[i] + P.w[i] / 2)
-        bp.y_max = max(bp.y_max, P.cy[i] + P.h[i] / 2)
-    for bp in bparams:
-        if bp.x_min > bp.x_max:
-            bp.x_min, bp.x_max = bp.x_max, bp.x_min
-        if bp.y_min > bp.y_max:
-            bp.y_min, bp.y_max = bp.y_max, bp.y_min
+    bparams = block_params(P, blocks, id_max)
 
     # A9 orientation vote (make_block.cpp:1543-1553)
     orientation = 0.0
@@ -2573,31 +2670,7 @@ def make_block(P: Page) -> None:
         block_idx[st:ed] = group
         st = ed
 
-    # assign block numbers (make_block.cpp:1696-1715)
-    chain_remap = [-1] * id_max
-    chain_page = [0] * id_max
-    for renum, bi in enumerate(block_idx):
-        for c in blocks[bi]:
-            chain_remap[c] = renum
-            chain_page[c] = bparams[bi].p
-    for i in range(P.n):
-        if P.idx[i] < 0:
-            continue
-        P.block[i] = chain_remap[int(P.idx[i])]
-        P.page[i] = chain_page[int(P.idx[i])]
-
-    # A14 dense per-block line renumber (make_block.cpp:1717-1737)
-    idx_in_block: dict[int, list[int]] = {}
-    for i in range(P.n):
-        if P.idx[i] < 0 or P.block[i] < 0:
-            continue
-        idx_in_block.setdefault(int(P.block[i]), []).append(int(P.idx[i]))
-    for bi in idx_in_block:
-        idx_in_block[bi] = sorted(set(idx_in_block[bi]))
-    for i in range(P.n):
-        if P.idx[i] < 0 or P.block[i] < 0:
-            continue
-        P.idx[i] = idx_in_block[int(P.block[i])].index(int(P.idx[i]))
+    number_blocks(P, blocks, block_idx, bparams, id_max)
 
 
 def warichu_reorder(P: Page, order: list[int]) -> None:
@@ -2658,6 +2731,31 @@ def remove_dupspace(P: Page, order: list[int]) -> None:
             P.subtype[b] &= ~SUBTYPE_SPACE
 
 
+def block_heads(P: Page, order: list[int]) -> dict[int, tuple]:
+    """Per block (ascending), from its non-ruby boxes in reading order:
+    the first three boxes of each line, the largest box size along the
+    line axis, and whether the block's last such box is vertical
+    (space_check.cpp:80-105)."""
+    block_l, idx_l = P.block.tolist(), P.idx.tolist()
+    ruby_l = ((P.subtype & 6) == 6).tolist()
+    vert_l = ((P.subtype & SUBTYPE_VERTICAL) != 0).tolist()
+    w_l, h_l = P.w.tolist(), P.h.tolist()
+    heads: dict[int, tuple] = {}
+    for i in order:
+        b = block_l[i]
+        if b < 0:
+            continue
+        lines, s0, vertical = heads.get(b, ({}, 0.0, False))
+        if not ruby_l[i]:
+            vertical = vert_l[i]
+            s0 = max(s0, h_l[i] if vertical else w_l[i])
+            lb = lines.setdefault(idx_l[i], [])
+            if len(lb) < 3:
+                lb.append(i)
+        heads[b] = (lines, s0, vertical)
+    return dict(sorted(heads.items()))
+
+
 def find_lostspace(P: Page, order: list[int]) -> None:
     """W6 lost-space detection (find_lostspace space_check.cpp:76-673):
     per block, take each line's first <=3 non-ruby boxes, reject thin /
@@ -2680,19 +2778,7 @@ def find_lostspace(P: Page, order: list[int]) -> None:
     bottom half: backward walk, then a forward pass
     (space_check.cpp:209-600, incl. the per-pass threshold asymmetries
     0.85/0.75/1.0 of the reference)."""
-    blocks = sorted({int(P.block[i]) for i in order if P.block[i] >= 0})
-    for b in blocks:
-        lines: dict[int, list[int]] = {}
-        s0 = 0.0
-        vertical = False
-        for i in order:
-            if P.block[i] != b or P.is_ruby(i):
-                continue
-            vertical = (P.subtype[i] & SUBTYPE_VERTICAL) != 0
-            s0 = max(s0, P.h[i] if vertical else P.w[i])
-            lines.setdefault(int(P.idx[i]), [])
-            if len(lines[int(P.idx[i])]) < 3:
-                lines[int(P.idx[i])].append(i)
+    for lines, s0, vertical in block_heads(P, order).values():
         axis = P.cy if vertical else P.cx
         size = P.h if vertical else P.w
         cross = P.cx if vertical else P.cy

@@ -69,7 +69,7 @@ def test_partitioning_invariance(spark, corpus):
         assert a[col].map(_norm_nested).equals(b[col].map(_norm_nested))
 
 
-def test_blank_layout_reaches_output_on_both_legs(spark, corpus):
+def test_blank_layout_reaches_output(spark, corpus):
     """A valid raster page with zero glyphs/textlines (and a zero-strength
     separator stroke) must yield an empty-text doc row — not silently
     vanish (ADVICE r2: a url without detections could drop out of the
@@ -117,7 +117,7 @@ def test_raster_records_nonempty(spark, corpus):
         assert joined == r.text
 
 
-def test_null_html_quarantined_identically_in_both_plans(spark):
+def test_null_html_quarantined(spark):
     """ADVICE r4 (medium): a null html cell must become ONE quarantine
     row — not a task crash (the kernel once did bytes(None)) and not a
     silently vanished url."""

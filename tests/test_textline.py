@@ -9,6 +9,7 @@ and multi-column section reading order (W3).
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from findtextcenternet_spark.corpus import make_layout, make_text
 from findtextcenternet_spark.golden import extract_raster_page
@@ -16,8 +17,12 @@ from findtextcenternet_spark.operators.detect import detect_page
 from findtextcenternet_spark.operators.group import group_page
 from findtextcenternet_spark.operators.textline import (
     Page,
+    _build_chainid_map,
+    create_chainid_map,
     fix_chain_info,
+    linefind,
     make_lineblocker,
+    make_track_line,
     run_textline_detect,
 )
 
@@ -341,3 +346,58 @@ def test_p6_keeps_faint_but_valid_glyphs():
         g["contrast"] = 0.5
     boxes, _runs = detect_page(layout)
     assert len(boxes) == n
+
+
+# ---------------------------------------------------------------- memo
+
+def test_chainid_memo_tracks_its_inputs():
+    """The chain-id raster memo is keyed on every input the raster reads:
+    after each change (a box moved between chains, a direction, a
+    double_line entry, a box's ruby bits, a lineblocker cell) the memoized
+    call must equal a fresh build — and the change must have changed the
+    raster, or the check proves nothing. The returned raster is
+    read-only."""
+    # three rows of boxes with one-cell-plus gaps (only the track band
+    # fills them); the last row zigzags, so its track follows the boxes
+    boxes = _boxes([(40 * i + 20, 100 + 60 * r + (8 * (-1) ** i if r == 2
+                                                  else 0), 28, 28)
+                    for r in range(3) for i in range(8)])
+    lines = np.array([[25 + 15 * r, 2, 80] for r in range(3)],
+                     dtype=np.int64)
+    P = Page(boxes, lines, NO_RUNS, np.zeros(0))
+    make_lineblocker(P)
+    chains = linefind(P)
+    assert [len(c) for c in chains] == [8, 8, 8]
+
+    cmap = create_chainid_map(P, chains)
+    assert create_chainid_map(P, chains) is cmap
+    with pytest.raises(ValueError):
+        cmap[0, 0] = 7
+
+    def move_box():
+        chains[1].append(chains[0].pop())
+
+    def turn_vertical():
+        P.direction[chains[1][0]] = np.pi / 2
+
+    def mark_warichu():
+        P.double_line[chains[2][3]] = 1
+
+    def mark_ruby():
+        P.subtype[chains[0][0]] |= 6
+
+    for change in (move_box, turn_vertical, mark_warichu, mark_ruby):
+        before = create_chainid_map(P, chains).copy()
+        change()
+        got = create_chainid_map(P, chains)
+        assert np.array_equal(got, _build_chainid_map(P, chains, 1.0, 0)), \
+            change.__name__
+        assert not np.array_equal(got, before), change.__name__
+
+    # only the extended track (extra_len > 0) stops at blocker cells
+    before = create_chainid_map(P, chains, 1.0, 1).copy()
+    xs, ys, *_ = make_track_line(P, chains, 2, 1)
+    P.lineblocker[ys[0] // 4, xs[0] // 4] = True
+    got = create_chainid_map(P, chains, 1.0, 1)
+    assert np.array_equal(got, _build_chainid_map(P, chains, 1.0, 1))
+    assert not np.array_equal(got, before)
