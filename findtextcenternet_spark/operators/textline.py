@@ -570,24 +570,20 @@ def sort_chain(chain: list[int], P: Page) -> None:
         axis, cross, size = P.cx, P.cy, P.w
     else:
         axis, cross, size = P.cy, P.cx, P.h
-    idx = np.asarray(chain, dtype=np.int64)
-    a = axis[idx]
-    order = np.lexsort((idx, a))
-    idx, a = idx[order], a[order]
-    # a group runs from its head i up to the first box at or past the
-    # head's half-size reach (a is sorted, so that is a searchsorted)
-    n = len(idx)
-    ends = np.maximum(np.searchsorted(a, a + size[idx] / 2),
-                      np.arange(1, n + 1))
-    out = idx.tolist()
-    if (ends[:-1] > np.arange(1, n)).any():
-        ends = ends.tolist()
-        i = 0
-        while i < n:
-            j = ends[i]
-            if j - i > 1:
-                out[i:j] = sorted(out[i:j], key=lambda b: (cross[b], b))
-            i = j
+    keyed = sorted(zip(axis[chain].tolist(), chain))
+    a = [k for k, _ in keyed]
+    out = [b for _, b in keyed]
+    reach = (axis[out] + size[out] / 2).tolist()
+    # a group runs from its head while the next box starts before the
+    # head's half-size reach
+    i, n = 0, len(out)
+    while i < n - 1:
+        j = i + 1
+        while j < n and reach[i] > a[j]:
+            j += 1
+        if j - i > 1:
+            out[i:j] = sorted(out[i:j], key=lambda b: (cross[b], b))
+        i = j
     chain[:] = out
 
 
@@ -652,16 +648,16 @@ def find_linecenter_id(P: Page, chains: list[list[int]], chainid: int):
     cand = nonruby[np.maximum(P.w[nonruby], P.h[nonruby]) / s >= 0.4]
     if not len(cand):
         return [], direction, w, h, s_cx, s_cy, e_cx, e_cy
+    cx, cy = P.cx[cand], P.cy[cand]
     # builtin sum: the left-to-right float fold of the reference
-    center_x = sum(P.cx[cand].tolist()) / len(cand)
-    center_y = sum(P.cy[cand].tolist()) / len(cand)
+    center_x = sum(cx.tolist()) / len(cand)
+    center_y = sum(cy.tolist()) / len(cand)
     if abs(direction) < M_PI_4:
-        fit = math.tan(direction) * (P.cx[cand] - center_x) + center_y
-        near = np.abs(fit - P.cy[cand]) < s / 2
+        fit = math.tan(direction) * (cx - center_x) + center_y
+        near = np.abs(fit - cy) < s / 2
     else:
-        fit = math.tan(M_PI_2 - direction) * (P.cy[cand] - center_y) \
-            + center_x
-        near = np.abs(fit - P.cx[cand]) < s / 2
+        fit = math.tan(M_PI_2 - direction) * (cy - center_y) + center_x
+        near = np.abs(fit - cx) < s / 2
     return (cand[near].tolist(), direction, w, h,
             s_cx, s_cy, e_cx, e_cy)
 
@@ -2241,65 +2237,69 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     dvals = np.array([lp.d for lp in lineparams], dtype=np.int64)
     sizes = np.array([lp.size for lp in lineparams], dtype=np.float64)
 
-    # per scan: chain, axis steps, baseline t = a * (step - p1) + t1,
-    # orientation, transverse depth K
-    scans: list[tuple] = []
-    for chainid in range(id_max):
-        chain = chains[chainid]
-        lp = lineparams[chainid]
-        if not chain or lp.d not in (1, 2):
-            continue
-        horizontal = lp.d == 2
-        idx = np.asarray(chain, dtype=np.int64)
-        s = np.maximum(P.w[idx], P.h[idx])
-        s_s = s.max()
-        with np.errstate(divide="ignore", invalid="ignore"):
-            odd = np.abs(s - s_s) / np.minimum(s, s_s) > 0.5
-        base = idx[~odd & ((P.subtype[idx] & 6) != 6)
-                   & ~(P.double_line[idx] > 0)]
-        if not len(base):
-            continue
-        if horizontal:
-            axis, cross, half = P.cx, P.cy, P.w / 2
-        else:
-            axis, cross, half = P.cy, P.cx, P.h / 2
-        # the baseline starts at the first base box, unless that box's
-        # start point is negative in both coordinates (then the next)
-        p1s = axis[base] - half[base]
-        t1s = cross[base]
-        neg = (p1s < 0) & (t1s < 0)
-        first = int(np.argmin(neg)) if not neg.all() else len(base) - 1
-        p1, t1 = p1s[first], t1s[first]
-        last = base[-1]
-        p2, t2 = axis[last] + half[last], cross[last]
-        if p2 - p1 < SCALE:
-            continue
-        a = (t2 - t1) / (p2 - p1)
-        if horizontal:
-            K = int(s_s / SCALE * scanwidth)  # range(yi, int(yi+c)) length
-        else:
-            # range(xi, int(xi-c), -1) spans ceil(c) cells (int()
-            # truncates toward zero; out-of-page cells are masked dead)
-            K = int(math.ceil(s_s / SCALE * scanwidth))
-        if K <= 0:
-            continue
-        mid = int((p1 + p2) / 2)
-        for steps in (np.arange(mid, int(p2 + s_s), SCALE, dtype=np.float64),
-                      np.arange(mid, int(p1 - s_s), -SCALE,
-                                dtype=np.float64)):
-            if len(steps):
-                scans.append((chainid, steps, a, p1, t1, horizontal, K,
-                              lp.size))
-    if not scans:
+    # per line: the baseline from its first to its last base box (size
+    # within 50% of the line's largest, no ruby, no warichu); the first
+    # box is skipped while its start point is negative in both coordinates
+    live = [c for c in range(id_max)
+            if chains[c] and lineparams[c].d in (1, 2)]
+    if not live:
         return chain_next, chain_prev
-
-    cid_s, steps_s, a_s, p1_s, t1_s, hz_s, K_s, size_s = zip(*scans)
-    a_s, p1_s, t1_s = (np.asarray(v) for v in (a_s, p1_s, t1_s))
-    cid_s, K_s = np.asarray(cid_s), np.asarray(K_s)
-    hz_s, size_s = np.asarray(hz_s), np.asarray(size_s, dtype=np.float64)
-    n_s = np.array([len(st) for st in steps_s])
-    sid = np.repeat(np.arange(len(scans)), n_s)
-    steps = np.concatenate(steps_s)
+    lens = [len(chains[c]) for c in live]
+    idx = np.fromiter((b for c in live for b in chains[c]), dtype=np.int64)
+    seg = np.repeat(np.arange(len(live)), lens)
+    pos = np.arange(len(idx))
+    s = np.maximum(P.w[idx], P.h[idx])
+    s_s = np.maximum.reduceat(s, np.cumsum(lens) - lens)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        odd = np.abs(s - s_s[seg]) / np.minimum(s, s_s[seg]) > 0.5
+    base = ~odd & ((P.subtype[idx] & 6) != 6) & ~(P.double_line[idx] > 0)
+    hz_l = dvals[live] == 2
+    hz = hz_l[seg]
+    cx, cy, w, h = P.cx[idx], P.cy[idx], P.w[idx], P.h[idx]
+    p_lo = np.where(hz, cx - w / 2, cy - h / 2)
+    p_hi = np.where(hz, cx + w / 2, cy + h / 2)
+    t_at = np.where(hz, cy, cx)
+    ok = base & ~((p_lo < 0) & (t_at < 0))
+    first = np.full(len(live), len(idx))
+    np.minimum.at(first, seg[ok], pos[ok])
+    last = np.full(len(live), -1)
+    np.maximum.at(last, seg[base], pos[base])
+    first = np.where(first < len(idx), first, last)
+    keep = np.nonzero(last >= 0)[0]
+    first, last = first[keep], last[keep]
+    p1, t1, p2, t2 = p_lo[first], t_at[first], p_hi[last], t_at[last]
+    ss, hz_l = s_s[keep], hz_l[keep]
+    cid_l = np.asarray(live)[keep]
+    keep = np.nonzero(p2 - p1 >= SCALE)[0]
+    p1, t1, p2, t2, ss, hz_l, cid_l = (v[keep] for v in (p1, t1, p2, t2, ss,
+                                                         hz_l, cid_l))
+    a_l = (t2 - t1) / (p2 - p1)
+    depth = ss / SCALE * scanwidth
+    # horizontal: range(yi, int(yi+c)) is int(c) cells; vertical:
+    # range(xi, int(xi-c), -1) spans ceil(c) cells (int() truncates
+    # toward zero; out-of-page cells are masked dead below)
+    K_l = np.where(hz_l, depth, np.ceil(depth)).astype(np.int64)
+    mid = ((p1 + p2) / 2).astype(np.int64)
+    fwd_end = (p2 + ss).astype(np.int64)
+    bwd_end = (p1 - ss).astype(np.int64)
+    # two scans per line, forward then backward along the axis
+    L = len(cid_l)
+    line = np.repeat(np.arange(L), 2)
+    sign = np.tile([1, -1], L)
+    span = np.where(sign > 0, fwd_end[line] - mid[line],
+                    mid[line] - bwd_end[line])
+    n_s = np.maximum((span + SCALE - 1) // SCALE, 0)
+    n_s[K_l[line] <= 0] = 0
+    scan = np.nonzero(n_s)[0]
+    if not len(scan):
+        return chain_next, chain_prev
+    line, sign, n_s = line[scan], sign[scan], n_s[scan]
+    cid_s, K_s = cid_l[line], K_l[line]
+    a_s, p1_s, t1_s, hz_s = a_l[line], p1[line], t1[line], hz_l[line]
+    size_s = sizes[cid_s]
+    sid = np.repeat(np.arange(len(scan)), n_s)
+    k_in = np.arange(len(sid)) - np.repeat(np.cumsum(n_s) - n_s, n_s)
+    steps = (mid[line][sid] + sign[sid] * SCALE * k_in).astype(np.float64)
     t = a_s[sid] * (steps - p1_s[sid]) + t1_s[sid]
     hz = hz_s[sid]
     p_cell = (steps / SCALE).astype(np.int64)
@@ -2310,7 +2310,7 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     blocked = inb & P.lineblocker[np.where(inb, yi, 0), np.where(inb, xi, 0)]
     # a scan stops at its first in-page blocker cell
     pos = np.arange(len(steps))
-    cut = np.full(len(scans), len(steps))
+    cut = np.full(len(scan), len(steps))
     np.minimum.at(cut, sid[blocked], pos[blocked])
     cells = np.nonzero(inb & (pos < cut[sid]))[0]
     ssid = sid[cells]
@@ -2342,13 +2342,12 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
 
     # replay: an acceptance only ends a cell's walk when the chain is NEW
     ev_scan = ssid[er]
-    bounds = np.searchsorted(ev_scan, np.arange(len(scans) + 1)).tolist()
+    bounds = np.searchsorted(ev_scan, np.arange(len(scan) + 1)).tolist()
     ev_j, ev_k, ev_oc = jidx[er].tolist(), ek.tolist(), oc[er, ek].tolist()
-    for s, chainid in enumerate(cid_s.tolist()):
+    for si, chainid in enumerate(cid_s.tolist()):
+        lo, hi = bounds[si], bounds[si + 1]
         done_depth: dict[int, int] = {}
-        for j, kk, oc_v in zip(ev_j[bounds[s]:bounds[s + 1]],
-                               ev_k[bounds[s]:bounds[s + 1]],
-                               ev_oc[bounds[s]:bounds[s + 1]]):
+        for j, kk, oc_v in zip(ev_j[lo:hi], ev_k[lo:hi], ev_oc[lo:hi]):
             if j in done_depth and kk > done_depth[j]:
                 continue
             if oc_v not in chain_next[chainid]:
