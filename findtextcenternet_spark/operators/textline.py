@@ -36,6 +36,25 @@ Documented divergences (each deliberate, none observable on clean pages):
 Scale note: this runs per page inside the extraction kernel — pages never
 cross executors, so the stage is embarrassingly parallel and its cost is
 O(page) regardless of corpus size.
+
+Performance structure (output byte-identical to the scalar port, which
+``tests/textline_reference.py`` keeps and ``tests/test_textline_vectorized.py``
+checks call by call):
+* The chain-id raster (``create_chainid_map``) is built up to five times
+  per page, mostly from unchanged inputs. The page keeps the last build,
+  keyed on the content of everything the build reads — the chains, ratio,
+  extra_len, ``direction``, ``double_line``, the ruby bits of ``subtype``
+  and ``lineblocker``; box geometry never changes — so a hit is exact.
+  The kept raster is read-only.
+* Vectorize, then replay: a probe walk whose stopping rule is local (a
+  blocker, a foreign chain, the page edge) becomes one NumPy grid over
+  every (start, step) of every walk, with the barrier as a prefix-AND
+  along the step axis. Only the grid cells that can decide a walk —
+  candidate hits — go back to Python, in the walk's original order,
+  where the order-dependent state (dedup lists, "first writer wins",
+  a hit that ends or does not end the walk) is applied exactly as the
+  loop did. Float folds whose rounding depends on order (EMA anchors,
+  running track midpoints, ``sum``) stay scalar.
 """
 
 from __future__ import annotations
@@ -251,14 +270,11 @@ def make_lineblocker(P: Page) -> None:
     seeds = np.nonzero(blocker)
     sep = P.sepimage
     H, W = P.H, P.W
-    if not len(seeds[0]):
-        P.lineblocker = blocker
-        return
-    grow = ~blocker & _dilate(blocker, 1) & (sep.astype(np.float64)
-                              >= float(sep[seeds].min()) * 0.1)
-    if not grow.any():
-        P.lineblocker = blocker
-        return
+    if len(seeds[0]) and not (
+            ~blocker & _dilate(blocker, 1)
+            & (sep.astype(np.float64) >= float(sep[seeds].min()) * 0.1)
+    ).any():
+        seeds = (seeds[0][:0], seeds[1][:0])
     for y0, x0 in zip(seeds[0].tolist(), seeds[1].tolist()):
         value_th = sep.item(y0, x0) * 0.1
         stack = [(y0, x0)]
