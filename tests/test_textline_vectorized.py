@@ -2,8 +2,8 @@
 scalar loop it replaced returns (``textline_reference.py``).
 
 The kernel runs over the 1,000 ``test_textline_fuzz.gen_layout`` seeds,
-200 ``line_layout`` pages (cut textlines in both orientations, which the
-fuzz layouts lack) and a few corpus raster pages. Each replaced function is wrapped: every
+200 ``line_layout`` pages (textlines in pieces, in both orientations,
+which the fuzz layouts lack) and a few corpus raster pages. Each replaced function is wrapped: every
 call the kernel makes also runs the reference on a deep copy of the same
 arguments, and the results and the arguments afterwards (both may be
 mutated) must be equal — floats bit for bit, NaN equal to NaN. The
@@ -140,50 +140,58 @@ def checked(monkeypatch):
 
 
 def line_layout(seed: int):
-    """Horizontal or vertical lines with textline evidence, each run cut
-    into pieces (two chains the merge probes must join or keep apart),
-    plus ruby beside some lines, separators (some across a cut, some with
-    a weak halo the hysteresis grow reaches) and odd glyph widths. The
-    fuzz layouts never grow a line sideways, merge chains or grow a
-    separator; these do."""
+    """Horizontal or vertical lines with textline evidence, each made of
+    two or three pieces (separate runs, so separate chains the merge
+    probes must join or keep apart) of differing glyph size and spacing,
+    plus ruby beside some lines, separators (some in a gap between
+    pieces, some with a weak halo the hysteresis grow reaches) and odd
+    glyph widths. The fuzz layouts never grow a line sideways, merge
+    chains or grow a separator; these do."""
     rng = np.random.default_rng(10_000 + seed)
     vertical = bool(seed % 2)
     s = float(rng.integers(16, 41))
-    n_lines, n_glyphs = int(rng.integers(2, 6)), int(rng.integers(5, 14))
+    n_lines = int(rng.integers(2, 6))
     pitch_line = s * float(rng.uniform(1.4, 2.4))
-    pitch_glyph = s * float(rng.uniform(1.02, 1.3))
     a0, c0 = float(rng.integers(40, 120)), float(rng.integers(60, 160))
     along, across, size, code1 = [], [], [], []
     runs, seps = [], []
+    end = a0
     for ln in range(n_lines):
         c = c0 + (n_lines - 1 - ln if vertical else ln) * pitch_line
-        for g in range(n_glyphs):
-            along.append(a0 + g * pitch_glyph)
-            across.append(c + rng.uniform(-s * 0.1, s * 0.1))
-            size.append(s * float(rng.choice([1.0, 1.0, 1.0, 0.5])))
-            code1.append(0.0)
-        if rng.random() < 0.4:  # ruby beside the line
-            for g in range(int(rng.integers(1, n_glyphs))):
-                along.append(a0 + g * pitch_glyph)
-                across.append(c + (s * 0.8 if vertical else -s * 0.8))
-                size.append(s * 0.45)
-                code1.append(0.95)
-        # the line's run, cut at one glyph gap
-        cut = int(rng.integers(1, n_glyphs - 1))
-        gap = int(rng.integers(0, 3))
-        half = int(rng.integers(0, 2))
         ccell = int(c // SCALE)
-        for lo, hi in ((0, cut), (cut + gap, n_glyphs)):
-            a1 = int((a0 + lo * pitch_glyph - s / 2) // SCALE)
-            a2 = int((a0 + (hi - 1) * pitch_glyph + s / 2) // SCALE)
+        half = int(rng.integers(0, 2))
+        first = len(along)
+        pos = a0
+        gaps = []
+        for _piece in range(int(rng.integers(2, 4))):
+            sz = s * float(rng.choice([1.0, 1.0, 0.7, 0.5]))
+            pitch = sz * float(rng.uniform(1.02, 1.3))
+            start = pos
+            for _g in range(int(rng.integers(2, 6))):
+                along.append(pos + sz / 2)
+                across.append(c + rng.uniform(-s * 0.1, s * 0.1))
+                size.append(sz * float(rng.choice([1.0, 1.0, 1.0, 0.5])))
+                code1.append(0.0)
+                pos += pitch
+            end = pos - pitch + sz
+            a1, a2 = int(start // SCALE), int(end // SCALE)
             for d in range(-half, half + 1):
                 if vertical:
                     runs += [[y, ccell + d, ccell + d]
                              for y in range(a1, a2 + 1)]
                 else:
                     runs.append([ccell + d, a1, a2])
-        if rng.random() < 0.3:  # a separator stroke across the cut
-            at = int((a0 + (cut - 0.5) * pitch_glyph) // SCALE)
+            gap = s * float(rng.choice([0.3, 1.0, 2.5]))
+            gaps.append(end + gap / 2)
+            pos = end + gap
+        if rng.random() < 0.4:  # ruby beside the line
+            for a in along[first:first + int(rng.integers(1, 5))]:
+                along.append(a)
+                across.append(c + (s * 0.8 if vertical else -s * 0.8))
+                size.append(s * 0.45)
+                code1.append(0.95)
+        if rng.random() < 0.3:  # a separator stroke in a gap
+            at = int(gaps[int(rng.integers(0, len(gaps) - 1))] // SCALE)
             span = (int((c - s) // SCALE), int((c + s) // SCALE))
             if vertical:
                 seps.append(([at, span[0], span[1]], 0.982))
@@ -192,8 +200,7 @@ def line_layout(seed: int):
                          for y in range(span[0], span[1] + 1)]
     if rng.random() < 0.5:  # a heavy rule with a weak halo
         at = int((c0 - pitch_line) // SCALE)
-        lo = int(a0 // SCALE)
-        hi = int((a0 + n_glyphs * pitch_glyph) // SCALE)
+        lo, hi = int(a0 // SCALE), int(end // SCALE)
         for off, v in ((0, 0.982), (1, float(rng.uniform(0.05, 0.099)))):
             if vertical:
                 seps += [([y, at + off, at + off], v)
