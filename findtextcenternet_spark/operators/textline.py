@@ -1045,7 +1045,6 @@ def merge_targets(P: Page, chains: list[list[int]], cmap: np.ndarray
     oc = cmap[y, x]
     own = np.asarray(wchain)[walk][:, None]
     rows, ks = np.nonzero(blk | (ok & (oc >= 0) & (oc != own)))
-    ev_walk = walk[rows].tolist()
     ev_row = rows.tolist()
     ev_blk = blk[rows, ks].tolist()
     ev_oc = oc[rows, ks].tolist()

@@ -3,13 +3,13 @@ scalar loop it replaced returns (``textline_reference.py``).
 
 The kernel runs over the 1,000 ``test_textline_fuzz.gen_layout`` seeds,
 200 ``line_layout`` pages (textlines in pieces, in both orientations,
-which the fuzz layouts lack) and a few corpus raster pages. Each replaced function is wrapped: every
-call the kernel makes also runs the reference on a deep copy of the same
-arguments, and the results and the arguments afterwards (both may be
-mutated) must be equal — floats bit for bit, NaN equal to NaN. The
-chain-id raster comes from the kernel's memo and the reference builds it
-afresh, so this also checks the memo against every build the kernel asks
-for.
+which the fuzz layouts lack) and a few corpus raster pages. Each
+replaced function is wrapped: every call the kernel makes also runs the
+reference on a copy of the same arguments, and the results and the
+arguments afterwards (both may be mutated) must be equal — arrays bit
+for bit, NaN equal to NaN. The chain-id raster comes from the kernel's
+memo and the reference builds it afresh, so this also checks the memo
+against every build the kernel asks for.
 """
 
 from __future__ import annotations
